@@ -24,6 +24,9 @@ from pyspark.sql import functions as F
 #: Tier order: anything below the configured level is filtered.
 TIER_RANK = {"INVALID": 0, "BASE": 1, "L0": 2, "L1": 3}
 VALIDATION_LEVELS = ("NONE",) + tuple(TIER_RANK)
+#: Minimum completeness weight of the weighted profiles (IDI-Patient-L1,
+#: IDI-Patient-L0). ``tier_expr`` and ``validation_gate`` both read it.
+TIER_MIN_WEIGHT = {"L1": 10, "L0": 9}
 
 
 def _present(c: str) -> Column:
@@ -59,8 +62,8 @@ def tier_expr(weight: Column | None = None) -> Column:
     """P4 tier classification: L1 (>=10) > L0 (>=9) > BASE > INVALID."""
     w = completeness_weight_expr() if weight is None else weight
     return (
-        F.when(w >= 10, "L1")
-        .when(w >= 9, "L0")
+        F.when(w >= TIER_MIN_WEIGHT["L1"], "L1")
+        .when(w >= TIER_MIN_WEIGHT["L0"], "L0")
         .when(base_valid_expr(), "BASE")
         .otherwise("INVALID")
     )
@@ -69,17 +72,28 @@ def tier_expr(weight: Column | None = None) -> Column:
 def validation_gate(records: DataFrame, config) -> DataFrame:
     """P6 runtime gate: drop records below ``config.validation_level``
     before blocking (so an INVALID record can never produce a pair), or
-    pass everything when the level is NONE / the override is set."""
+    pass everything when the level is NONE / the override is set.
+
+    The gate is one predicate that evaluates the completeness weight
+    once, straight from the tier thresholds: a record ranks at least L1
+    or L0 exactly when its weight reaches that tier's minimum, and at
+    least BASE when it ranks at least L0 or passes the base profile.
+    Every record ranks at least INVALID, so that level filters nothing.
+    Keep it that small: filter pushdown inlines normalize's projections
+    (the ``sha2``/``regexp_replace`` hashes behind every weight column)
+    into the predicate, and a predicate that repeats the tier
+    classification grows the generated method past the JVM's 64 KB
+    limit, which drops the whole normalize stage out of whole-stage
+    codegen into interpreted mode.
+    """
     level = getattr(config, "validation_level", "NONE")
     if level == "NONE" or getattr(config, "validation_override", False):
         return records
     if level not in TIER_RANK:
         raise ValueError(f"unknown validation_level {level!r}; use one of {VALIDATION_LEVELS}")
-    need = TIER_RANK[level]
-    rank = (
-        F.when(tier_expr() == "L1", 3)
-        .when(tier_expr() == "L0", 2)
-        .when(tier_expr() == "BASE", 1)
-        .otherwise(0)
-    )
-    return records.filter(rank >= F.lit(need))
+    if level == "INVALID":
+        return records
+    w = completeness_weight_expr()
+    if level == "BASE":
+        return records.filter((w >= TIER_MIN_WEIGHT["L0"]) | base_valid_expr())
+    return records.filter(w >= TIER_MIN_WEIGHT[level])

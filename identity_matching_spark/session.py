@@ -14,6 +14,22 @@ import os
 from pyspark.sql import SparkSession
 
 
+def driver_memory() -> str:
+    """Driver heap size: ``SPARK_DRIVER_MEMORY`` when set, else 40% of the
+    host's MemTotal, capped at 24g. The driver JVM (heap plus off-heap) and
+    the Python workers must fit in RAM together; a fixed 24g heap is
+    OOM-killed on a 16 GB host without swap."""
+    explicit = os.environ.get("SPARK_DRIVER_MEMORY")
+    if explicit:
+        return explicit
+    try:
+        with open("/proc/meminfo", encoding="ascii") as fh:
+            kb = next(int(line.split()[1]) for line in fh if line.startswith("MemTotal:"))
+    except (OSError, StopIteration):
+        return "24g"  # no meminfo (non-Linux host): keep the cap
+    return f"{max(1, min(24, int(kb * 0.4 / 2**20)))}g"
+
+
 def build_session(
     app_name: str = "identity_matching_spark",
     cpus: int | None = None,
@@ -65,7 +81,7 @@ def build_session(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

@@ -50,8 +50,9 @@ def test_spark_submit_standalone_executor(tmp_path):
             env=dict(os.environ, PYSPARK_PYTHON=sys.executable),
         )
     assert r.returncode == 0, r.stderr[-2000:]
-    line = [l for l in r.stdout.splitlines() if l.startswith("{")][-1]
-    summary = json.loads(line)
+    lines = [l for l in r.stdout.splitlines() if l.startswith("{")]
+    assert lines, f"no JSON summary\nstdout:\n{r.stdout[-2000:]}\nstderr:\n{r.stderr[-2000:]}"
+    summary = json.loads(lines[-1])
     assert summary["pairs_scored"] > 0 and summary["n_clusters"] > 0
     assert os.path.exists(os.path.join(out, "clusters", "_SUCCESS"))
     # the work really happened on the worker's executor JVM, not in-process:

@@ -1,5 +1,6 @@
 """P5/P6 runtime validation gate + S7/F8 no-match outcome branch."""
 
+import itertools
 import json
 import os
 
@@ -7,9 +8,45 @@ from pyspark.sql import functions as F
 
 from identity_matching_spark.config import MatchConfig
 from identity_matching_spark.corpus import generate_files
-from identity_matching_spark.plans.pipeline import run_pipeline
+from identity_matching_spark.operators.validate import (
+    TIER_RANK,
+    VALIDATION_LEVELS,
+    completeness_weight_expr,
+    tier_expr,
+    validation_gate,
+)
+from identity_matching_spark.plans.pipeline import run_checkpointed, run_pipeline
 
 CFG = MatchConfig(enable_fuzzy=False)
+
+#: The record columns the completeness weight and base_valid read.
+GATE_STRING_COLS = (
+    "shape_sha", "norm_sha", "ins_member_sha", "ins_subscriber_sha",
+    "stem", "dir1", "content_sha256",
+)
+GATE_SCHEMA = "rid int, " + ", ".join(f"{c} string" for c in GATE_STRING_COLS) + ", size_bucket long"
+
+
+def _py_present(v) -> bool:
+    return v is not None and v != ""
+
+
+def _py_tier(row: dict) -> tuple[int, str]:
+    """Plain-Python port of the profile weight table and tier ladder."""
+    n_other = sum(_py_present(row[c]) for c in ("norm_sha", "ins_member_sha", "ins_subscriber_sha"))
+    w = (
+        (10 if _py_present(row["shape_sha"]) else 0)
+        + (4 if n_other == 1 else 5 if n_other > 1 else 0)
+        + (3 if _py_present(row["stem"]) and _py_present(row["dir1"]) else 0)
+        + (2 if row["size_bucket"] is not None else 0)
+    )
+    base_valid = (
+        _py_present(row["content_sha256"])
+        or (_py_present(row["stem"]) and _py_present(row["dir1"]))
+        or row["size_bucket"] is not None
+    )
+    tier = "L1" if w >= 10 else "L0" if w >= 9 else "BASE" if base_valid else "INVALID"
+    return w, tier
 
 
 def _with_invalid(spark, n_valid=30, n_bad=5):
@@ -48,6 +85,55 @@ def test_unknown_level_rejected(spark):
 
     with pytest.raises(ValueError, match="validation_level"):
         run_pipeline(files, CFG.with_(validation_level="L9"))
+
+
+def test_gate_keeps_exactly_rows_ranked_at_level(spark):
+    """Every presence combination (NULL, "" and a value for strings; NULL
+    and a value for size_bucket) of the columns the gate reads: at each
+    level the gate keeps exactly the rows whose tier ranks at least it."""
+    states = [(None, "", "x")] * len(GATE_STRING_COLS) + [(None, 7)]
+    rows = [(i, *combo) for i, combo in enumerate(itertools.product(*states))]
+    df = spark.createDataFrame(rows, GATE_SCHEMA)
+    tiered = {
+        r["rid"]: r
+        for r in df.select(
+            "*", completeness_weight_expr().alias("w"), tier_expr().alias("tier")
+        ).collect()
+    }
+    assert len(tiered) == 3 ** len(GATE_STRING_COLS) * 2
+    for r in tiered.values():
+        assert _py_tier(r.asDict()) == (r["w"], r["tier"])
+    assert {r["tier"] for r in tiered.values()} == set(TIER_RANK)
+    for level in VALIDATION_LEVELS:
+        kept = {r["rid"] for r in validation_gate(df, CFG.with_(validation_level=level)).collect()}
+        need = TIER_RANK.get(level, 0)
+        want = {rid for rid, r in tiered.items() if TIER_RANK[r["tier"]] >= need}
+        assert kept == want, level
+
+
+def test_gate_compiles_without_codegen_fallback(spark, tmp_path):
+    """With codegen fallback off, a generated method over the JVM's 64 KB
+    limit fails the query instead of silently running interpreted: both
+    production paths must compile the gate into the normalize stage."""
+    files = generate_files(spark, 20).drop("entity_id")
+
+    def shape(records, clusters):
+        c = clusters.agg(F.count("*"), F.countDistinct("cluster_id")).first()
+        return records.count(), c[0], c[1]
+
+    prev = spark.conf.get("spark.sql.codegen.fallback")
+    spark.conf.set("spark.sql.codegen.fallback", "false")
+    try:
+        res = run_pipeline(files, MatchConfig())
+        try:
+            want = shape(res.records, res.clusters)
+        finally:
+            res.cleanup()
+        out = run_checkpointed(spark, files, MatchConfig(), str(tmp_path / "ckpt"))
+        assert shape(out["records"], out["clusters"]) == want
+        assert want[0] == want[1] > 0
+    finally:
+        spark.conf.set("spark.sql.codegen.fallback", prev)
 
 
 def test_no_match_outcome_branch(spark, tmp_path):

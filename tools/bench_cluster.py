@@ -42,6 +42,7 @@ sys.path.insert(0, REPO)
 
 from bench_scaling import hw_calibration_med, mem_calibration  # noqa: E402
 from cluster_harness import SPARK_SUBMIT, StandaloneCluster  # noqa: E402
+from identity_matching_spark.session import driver_memory  # noqa: E402
 
 LO_WORKERS, HI_WORKERS, CORES_PER_WORKER = 1, 4, 2
 LO = LO_WORKERS * CORES_PER_WORKER
@@ -93,7 +94,7 @@ def run_leg(n_workers: int, sf_dir: str, zip_path: str, min_cal: float) -> dict:
         t0 = time.time()
         out = subprocess.run(
             [SPARK_SUBMIT, "--master", cluster.master_url,
-             "--deploy-mode", "client", "--driver-memory", "24g",
+             "--deploy-mode", "client", "--driver-memory", driver_memory(),
              "--py-files", zip_path,
              os.path.join(REPO, "bench.py")],
             env=env, capture_output=True, text=True, timeout=4000, cwd=REPO,
