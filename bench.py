@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 from identity_matching_spark.config import MatchConfig
 from identity_matching_spark.corpus import generate_files
 from identity_matching_spark.plans.pipeline import run_pipeline
-from identity_matching_spark.session import build_session
+from identity_matching_spark.session import build_session, default_cpus
 
 # entities per sf: sf0.1 -> 100k entities (~267k files) so steady-state
 # compute dominates fixed per-job overhead in the throughput measurement.
@@ -92,19 +92,13 @@ def run_headline(spark, n_entities: int):
     # the timed window still COMPUTES every reference output column
     # (nothing is pruned out of the run), it just never pays to cache
     # derived string arrays.
-    t1 = time.time()
     pairs_scored = res.scored_pairs.agg(
         F.count("*").alias("n"),
         F.sum(
             F.xxhash64(F.concat_ws("\x1f", F.col("match_messages"))).cast("decimal(38,0)")
         ).alias("mh"),
     ).collect()[0]["n"]
-    if os.environ.get("IMS_DEBUG_TIMING"):
-        print(f"[bench] messages_agg: {time.time() - t1:.1f}s", flush=True)
-    t1 = time.time()
     n_clusters = res.clusters.select("cluster_id").distinct().count()
-    if os.environ.get("IMS_DEBUG_TIMING"):
-        print(f"[bench] clusters_count: {time.time() - t1:.1f}s", flush=True)
     wall = time.time() - t0
     res.cleanup()  # outside the timed window; drops run-pinned cache blocks
     return wall, pairs_scored, n_clusters, n_rows
@@ -146,26 +140,7 @@ def prepare_scoring_inputs(spark, n_entities: int):
         records.select(*ATTR_COLS, "stem", "didx", *PHONETIC_H64_COLS).write.mode(
             "overwrite"
         ).parquet(rec_path)
-        recs = spark.read.parquet(rec_path)
-        b = candidate_pairs(records, MatchConfig())
-        pairs = b.pairs
-        if "left_didx" not in pairs.columns:
-            # legacy pair schema (blocking now emits didx twins itself when
-            # the records relation carries didx — the production path)
-            didx_map = recs.select("record_id", "didx")
-            pairs = (
-                pairs
-                .join(
-                    F.broadcast(didx_map.select(F.col("record_id").alias("left_id"),
-                                                F.col("didx").alias("left_didx"))),
-                    "left_id",
-                )
-                .join(
-                    F.broadcast(didx_map.select(F.col("record_id").alias("right_id"),
-                                                F.col("didx").alias("right_didx"))),
-                    "right_id",
-                )
-            )
+        pairs = candidate_pairs(records, MatchConfig()).pairs
         # 64 files: the scoring kernel is one shuffle-free codegen stage
         # over this scan, so its task count IS the file count — 4x the
         # widest bench parallelism keeps all cores busy through stragglers.
@@ -202,73 +177,74 @@ def run_scoring_kernel(spark, n_entities: int):
     prev_open_cost = spark.conf.get("spark.sql.files.openCostInBytes", None)
     if open_cost:
         spark.conf.set("spark.sql.files.openCostInBytes", str(open_cost))
-    records = spark.read.parquet(rec_path)
-    # Replicate the pair list so the timed section runs tens of seconds at
-    # every parallelism level — measures steady-state scoring throughput,
-    # not job-setup latency. SPARK_GRAFT_KERNEL_REP overrides (the
-    # cache-resident scaling experiment at small sf needs a higher K for
-    # the same timed-window length).
-    K = int(os.environ.get("SPARK_GRAFT_KERNEL_REP", "6"))
-    # A/B knob (VERDICT r4 #6): SPARK_GRAFT_PAIR_ORDER=shuffled scans a
-    # scrambled twin of the pair list instead of the left_didx-clustered
-    # one — same files/rows/plan, only the probe-key ORDER differs, so the
-    # pair (clustered, shuffled) isolates what near-sequential walks of
-    # the dense broadcast row pages are worth. tools/kernel_order_ab.py
-    # runs the interleaved measurement.
-    if os.environ.get("SPARK_GRAFT_PAIR_ORDER", "clustered") == "shuffled":
-        shuf_path = pair_path.replace(".parquet", "_shuf.parquet")
-        if not os.path.exists(os.path.join(shuf_path, "_SUCCESS")):
-            (
-                spark.read.parquet(pair_path)
-                .withColumn("_h", F.xxhash64("left_didx", "right_didx"))
-                .repartitionByRange(64, "_h")
-                .sortWithinPartitions("_h")
-                .drop("_h")
-                .write.mode("overwrite").parquet(shuf_path)
-            )
-        pair_path = shuf_path
-    pairs_once = spark.read.parquet(pair_path)
-    pairs = (
-        pairs_once
-        .withColumn("rep", F.explode(F.sequence(F.lit(0), F.lit(K - 1))))
-        .drop("rep")
-    )
-    t0 = time.time()
-    # jw_pairs = the unreplicated scan: the distinct-stem-pair table is a
-    # DISTINCT over the pair SET, so the replicas add zero information —
-    # identical table, 1/K the scan (production pair lists aren't
-    # replicated; the replication exists only to lengthen this window).
-    flagged = compare_pairs_fuzzy(pairs, records, MatchConfig(), jw_pairs=pairs_once)
-    scored = grade_pairs(flagged)
-    scored.jw_stem_cache = getattr(flagged, "jw_stem_cache", None)
-    # hash every COMPUTED output column into the aggregate so Catalyst
-    # cannot prune any comparator (incl. the fuzzy columns) out of the
-    # run; multi-arg xxhash64 hashes the columns directly without
-    # materializing a struct row per pair first. The id columns are scan
-    # passthrough (nothing to guard) — hashing their 64-char strings per
-    # pair would only measure string-hash bandwidth.
-    computed = [c for c in scored.columns if c not in ("left_id", "right_id")]
-    n = scored.agg(
-        F.count("*").alias("n"),
-        F.sum(
-            F.xxhash64(*[F.col(c) for c in computed]).cast("decimal(38,0)")
-        ).alias("h"),
-    ).collect()[0]["n"]
-    wall = time.time() - t0
-    jwtab = getattr(scored, "jw_stem_cache", None)
-    if jwtab is not None:
-        jwtab.unpersist()
-    if open_cost:
-        if prev_open_cost is None:
-            spark.conf.unset("spark.sql.files.openCostInBytes")
-        else:
-            spark.conf.set("spark.sql.files.openCostInBytes", prev_open_cost)
+    try:
+        records = spark.read.parquet(rec_path)
+        # Replicate the pair list so the timed section runs tens of seconds at
+        # every parallelism level — measures steady-state scoring throughput,
+        # not job-setup latency. SPARK_GRAFT_KERNEL_REP overrides (the
+        # cache-resident scaling experiment at small sf needs a higher K for
+        # the same timed-window length).
+        K = int(os.environ.get("SPARK_GRAFT_KERNEL_REP", "6"))
+        # A/B knob (VERDICT r4 #6): SPARK_GRAFT_PAIR_ORDER=shuffled scans a
+        # scrambled twin of the pair list instead of the left_didx-clustered
+        # one — same files/rows/plan, only the probe-key ORDER differs, so the
+        # pair (clustered, shuffled) isolates what near-sequential walks of
+        # the dense broadcast row pages are worth. tools/kernel_order_ab.py
+        # runs the interleaved measurement.
+        if os.environ.get("SPARK_GRAFT_PAIR_ORDER", "clustered") == "shuffled":
+            shuf_path = pair_path.replace(".parquet", "_shuf.parquet")
+            if not os.path.exists(os.path.join(shuf_path, "_SUCCESS")):
+                (
+                    spark.read.parquet(pair_path)
+                    .withColumn("_h", F.xxhash64("left_didx", "right_didx"))
+                    .repartitionByRange(64, "_h")
+                    .sortWithinPartitions("_h")
+                    .drop("_h")
+                    .write.mode("overwrite").parquet(shuf_path)
+                )
+            pair_path = shuf_path
+        pairs_once = spark.read.parquet(pair_path)
+        pairs = (
+            pairs_once
+            .withColumn("rep", F.explode(F.sequence(F.lit(0), F.lit(K - 1))))
+            .drop("rep")
+        )
+        t0 = time.time()
+        # jw_pairs = the unreplicated scan: the distinct-stem-pair table is a
+        # DISTINCT over the pair SET, so the replicas add zero information —
+        # identical table, 1/K the scan (production pair lists aren't
+        # replicated; the replication exists only to lengthen this window).
+        flagged = compare_pairs_fuzzy(pairs, records, MatchConfig(), jw_pairs=pairs_once)
+        scored = grade_pairs(flagged)
+        # hash every COMPUTED output column into the aggregate so Catalyst
+        # cannot prune any comparator (incl. the fuzzy columns) out of the
+        # run; multi-arg xxhash64 hashes the columns directly without
+        # materializing a struct row per pair first. The id columns are scan
+        # passthrough (nothing to guard) — hashing their 64-char strings per
+        # pair would only measure string-hash bandwidth; the didx twins are
+        # scan passthrough too.
+        computed = [c for c in scored.columns
+                    if c not in ("left_id", "right_id", "left_didx", "right_didx")]
+        n = scored.agg(
+            F.count("*").alias("n"),
+            F.sum(
+                F.xxhash64(*[F.col(c) for c in computed]).cast("decimal(38,0)")
+            ).alias("h"),
+        ).collect()[0]["n"]
+        wall = time.time() - t0
+        flagged.jw_stem_cache.unpersist()
+    finally:
+        if open_cost:
+            if prev_open_cost is None:
+                spark.conf.unset("spark.sql.files.openCostInBytes")
+            else:
+                spark.conf.set("spark.sql.files.openCostInBytes", prev_open_cost)
     return wall, n
 
 
 def main():
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_cpus()
     # Shuffle on tmpfs when available: /tmp here is a shared virtual disk
     # whose throughput swings with co-tenant load (a real cluster shuffles
     # to node-local NVMe). Spark's shutdown hook removes the dirs on stop.

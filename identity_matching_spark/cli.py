@@ -2,8 +2,9 @@
 --py-files identity_matching_spark.zip tools/run_linkage.py ...``).
 
 Reads the corpus (parquet path or ``synthetic:<n_entities>``), runs the
-checkpointed pipeline, writes clusters/scored_pairs/lineage under
---output, and prints a one-line JSON summary. Uses the ambient
+pipeline (durably, with stage snapshots and lineage, under
+--checkpoint-dir), writes clusters/scored_pairs under --output, and
+prints a one-line JSON summary. Uses the ambient
 SparkSession when launched by spark-submit; builds a local one otherwise.
 
 Output-assembly parity notes (SURVEY.md §2.8):
@@ -69,7 +70,7 @@ def main(argv: list[str] | None = None) -> int:
     from pyspark.sql import functions as F
 
     from identity_matching_spark.config import MatchConfig
-    from identity_matching_spark.plans.pipeline import run_checkpointed, run_pipeline
+    from identity_matching_spark.plans.pipeline import run_pipeline
 
     spark = _get_spark(args.cpus)
     config = MatchConfig(
@@ -86,12 +87,9 @@ def main(argv: list[str] | None = None) -> int:
         files = spark.read.parquet(args.input)
 
     t0 = time.time()
-    if args.checkpoint_dir:
-        out = run_checkpointed(spark, files, config, args.checkpoint_dir, resume=True)
-        scored, clusters = out["scored_pairs"], out["clusters"]
-    else:
-        res = run_pipeline(files, config)
-        scored, clusters = res.scored_pairs, res.clusters
+    res = run_pipeline(files, config, checkpoint_dir=args.checkpoint_dir)
+    scored, clusters = res.scored_pairs, res.clusters
+    if not args.checkpoint_dir:  # a checkpoint dir already holds block_stats
         res.block_stats.write.mode("overwrite").parquet(f"{args.output}/block_stats")
 
     params_ignored = {}
@@ -111,6 +109,7 @@ def main(argv: list[str] | None = None) -> int:
 
     scored.write.mode("overwrite").parquet(f"{args.output}/scored_pairs")
     clusters.write.mode("overwrite").parquet(f"{args.output}/clusters")
+    res.cleanup()
 
     n_pairs = spark.read.parquet(f"{args.output}/scored_pairs").count()
     n_clusters = (

@@ -61,14 +61,15 @@ class MatchConfig:
     # --- skew / shuffle ---
     salt_buckets: int = 16            # salt fan-out for hot blocking keys
     cc_max_iterations: int = 25       # large-star/small-star bound (log n in practice)
-    # Once the star iterations have shrunk the edge set at or below this
-    # row count, ephemeral (non-checkpointed) runs finish the component
-    # labeling with a single collect + driver union-find instead of more
-    # distributed rounds: each late iteration is a fixed ~5 s of
-    # scheduler/AQE latency over a few MB of edges — pure driver-phase
-    # overhead that does not scale with cores (the e2e-scaling cap,
-    # VERDICT r3 #2). 2M canonical edges ≈ 300 MB of 64-char id pairs —
-    # bounded driver memory; a larger graph keeps iterating distributed.
+    # Once the edge set is (or the star iterations have shrunk it) at or
+    # below this row count, CC finishes the component labeling with a
+    # single collect + driver union-find instead of more distributed
+    # rounds, with or without a checkpoint dir: each late iteration is a
+    # fixed ~5 s of scheduler/AQE latency over a few MB of edges — pure
+    # driver-phase overhead that does not scale with cores (the
+    # e2e-scaling cap, VERDICT r3 #2). 2M canonical edges ≈ 32 MB of didx
+    # long pairs — bounded driver memory; a larger graph keeps iterating
+    # distributed.
     cc_driver_finish_edges: int = 2_000_000
     # --- fuzzy comparators (mdm-rules.json matchFields; SURVEY.md C14-C16) ---
     jaro_winkler_threshold: float = 0.92
@@ -87,12 +88,8 @@ class MatchConfig:
     # partial agg in one codegen pass. Above it, slim shuffle-hash id
     # joins (the plan an arbitrary-scale pair list needs).
     records_broadcast_limit: int = 1_000_000
-    # Intern record ids to dense longs (normalize.with_dense_ids) right
-    # after normalize: blocking then emits left_didx/right_didx pair twins
-    # and every scoring attach keys on dense longs (LongHashedRelation
-    # direct-address probes — the kernel-bench fast path, now the
-    # production path). Off = legacy sparse rid64 twins.
-    dense_ids: bool = True
+    # Record ids are interned to dense longs (normalize.with_dense_ids)
+    # right after normalize; blocking, scoring and CC all key on them.
     # Prefix-bucket width for the dense-id rank passes. None = auto-scale
     # to the input (ceil(log16(n / 4M-row target)) — see
     # normalize.with_dense_ids); an explicit width is honored verbatim

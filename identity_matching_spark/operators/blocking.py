@@ -128,21 +128,29 @@ def blocking_keys(records: DataFrame, config: MatchConfig) -> DataFrame:
 
 @dataclass
 class BlockingResult:
-    pairs: DataFrame        # (left_id, right_id) canonical left<right, deduped
+    pairs: DataFrame        # (left_id, right_id, left_didx, right_didx), left<right, deduped
     block_stats: DataFrame  # (family, blocking_key, n_records, action) for oversized blocks
 
 
 def candidate_pairs(
     records: DataFrame, config: MatchConfig, n_records: int | None = None
 ) -> BlockingResult:
-    """Union-of-families self-equi-join with guards; returns deduped pairs.
+    """Union-of-families self-equi-join with guards; returns deduped pairs
+    ``(left_id, right_id, left_didx, right_didx)``.
 
-    ``n_records`` (when the caller already knows it) gates whether the
-    dense-id regime's final string-id re-attach broadcasts the slim
-    id map or shuffle-hash joins it.
+    ``records`` must carry the dense ids of ``normalize.with_dense_ids``:
+    the whole pair join runs on them. ``n_records`` (when the caller
+    already knows it) gates whether the final string-id re-attach
+    broadcasts the slim id map or shuffle-hash joins it.
     """
     from pyspark import StorageLevel
 
+    if "didx" not in records.columns:
+        raise ValueError(
+            "candidate_pairs needs dense record ids: pass the records through "
+            "operators.normalize.with_dense_ids first (a checkpoint dir written "
+            "before dense ids must be cleared, not resumed)"
+        )
     # keyed feeds three consumers (size count + both join sides) — persist
     # so key derivation (incl. MinHash) runs once. At cluster scale this is
     # the derived blocking-key table an Iceberg deployment would write out.
@@ -191,31 +199,21 @@ def candidate_pairs(
         "left",
     )
 
-    has_didx = "didx" in keyed.columns
-    # In the dense-id regime the ENTIRE pair join runs in 8-byte longs:
-    # didx is the rank of record_id, so didx ordering IS record_id
-    # ordering (canonical left<right unchanged) and the string ids are
-    # re-attached ONCE after the dedup from the slim id map. The
-    # quadratic self-join and the dedup exchange — the two biggest
-    # shuffles in the system at 10^12 files — then move 8 B per side
-    # instead of a 64-char id. Salting/sub-salting keys stay derived
-    # from record_id so the emitted pair SET is bit-identical to the
-    # didx-less regime.
-    rid = "didx" if has_didx else "record_id"
-    lpair_cols = (
-        [F.col("l.didx").alias("left_didx"), F.col("r.didx").alias("right_didx")]
-        if has_didx
-        else [F.col("l.record_id").alias("left_id"), F.col("r.record_id").alias("right_id")]
-    )
-
+    # The ENTIRE pair join runs in 8-byte longs: didx is the rank of
+    # record_id, so didx ordering IS record_id ordering (canonical
+    # left<right) and the string ids are re-attached ONCE after the dedup
+    # from the slim id map. The quadratic self-join and the dedup exchange
+    # — the two biggest shuffles in the system at 10^12 files — move 8 B
+    # per side instead of a 64-char id. Salting/sub-salting keys are
+    # derived from record_id, so the pair set does not depend on how the
+    # ids were interned.
     quad = keyed_sized.filter(
         F.col("is_star").isNull() & F.col("sub_k").isNull()
-    ).select("blocking_key", rid)
-    star = keyed_sized.filter(F.col("is_star") == True).select("blocking_key", rid)  # noqa: E712
+    ).select("blocking_key", "didx")
+    star = keyed_sized.filter(F.col("is_star") == True).select("blocking_key", "didx")  # noqa: E712
     # hot rows keep record_id alongside: the salt assignment hashes it
-    # (bit-identical pair set across both regimes), then projects it away
     hot_rows = keyed_sized.filter(F.col("is_hot") == True).select(  # noqa: E712
-        "blocking_key", "record_id", *(["didx"] if has_didx else [])
+        "blocking_key", "record_id", "didx"
     )
     sub_rows = keyed_sized.filter(F.col("sub_k").isNotNull()).select(
         F.concat(
@@ -223,7 +221,7 @@ def candidate_pairs(
             F.lit("#"),
             F.pmod(F.xxhash64("record_id"), F.col("sub_k")).cast("string"),
         ).alias("blocking_key"),
-        rid,
+        "didx",
     )
     # sub-blocks are ~cap-sized quadratic blocks — reuse the plain pair join
     quad = quad.unionByName(sub_rows)
@@ -231,8 +229,8 @@ def candidate_pairs(
     l, r = quad.alias("l"), quad.alias("r")
     quad_pairs = (
         l.join(r, "blocking_key")
-        .filter(F.col(f"l.{rid}") < F.col(f"r.{rid}"))
-        .select(*lpair_cols)
+        .filter(F.col("l.didx") < F.col("r.didx"))
+        .select(F.col("l.didx").alias("left_didx"), F.col("r.didx").alias("right_didx"))
     )
 
     # Hot-key salting (SURVEY.md §4.1): keys below the cap but big enough to
@@ -242,84 +240,59 @@ def candidate_pairs(
     # n^2/2 pair generation then spreads over S tasks instead of one.
     # (AQE skew-join stays on as backstop for everything else.)
     S = config.salt_buckets
-    lname, rname = ("left_didx", "right_didx") if has_didx else ("left_id", "right_id")
     salted_l = hot_rows.select(
         "blocking_key",
-        F.col(rid).alias("_l"),
+        F.col("didx").alias("_l"),
         F.pmod(F.xxhash64("record_id"), F.lit(S)).cast("int").alias("salt"),
     )
     salted_r = hot_rows.select(
         "blocking_key",
-        F.col(rid).alias("_r"),
+        F.col("didx").alias("_r"),
         F.explode(F.sequence(F.lit(0).cast("int"), F.lit(S - 1).cast("int"))).alias("salt"),
     )
     hot_pairs = (
         salted_l.join(salted_r, ["blocking_key", "salt"])
         .filter(F.col("_l") < F.col("_r"))
-        .select(F.col("_l").alias(lname), F.col("_r").alias(rname))
+        .select(F.col("_l").alias("left_didx"), F.col("_r").alias("right_didx"))
     )
     quad_pairs = quad_pairs.unionByName(hot_pairs)
 
-    # Star expansion: hub = min(id) per oversized identity block (in the
-    # dense regime min didx IS min record_id — didx is its rank).
-    hubs = star.groupBy("blocking_key").agg(F.min(rid).alias("hub"))
+    # Star expansion: hub = min(didx) per oversized identity block, which
+    # is the min record_id (didx is its rank).
+    hubs = star.groupBy("blocking_key").agg(F.min("didx").alias("hub"))
     star_pairs = (
         star.join(hubs, "blocking_key")
-        .filter(F.col(rid) != F.col("hub"))
-        .select(F.col("hub").alias(lname), F.col(rid).alias(rname))
+        .filter(F.col("didx") != F.col("hub"))
+        .select(F.col("hub").alias("left_didx"), F.col("didx").alias("right_didx"))
     )
 
-    # 8-byte key twins ride WITH the pair list (projected after the dedup
-    # shuffle, so they cost nothing to produce): the scoring kernel's
-    # broadcast probes join on these longs, and when a consumer prunes
-    # the string ids (the kernel's hash-agg does) the pair scan reads
-    # 16 B/pair instead of two 64-char ids — at 10^12-file scale the pair
-    # list is the biggest relation in the system, so its scan width is
-    # first-order DRAM traffic. When the records relation carries DENSE
-    # ids the twins are left_didx/right_didx (LongHashedRelation dense
-    # mode downstream — attach_sides key tier 1); otherwise the sparse
-    # rid64 sha-prefix twins (tier 2).
-    if has_didx:
-        deduped = quad_pairs.unionByName(star_pairs).dropDuplicates(
-            ["left_didx", "right_didx"]
+    deduped = quad_pairs.unionByName(star_pairs).dropDuplicates(
+        ["left_didx", "right_didx"]
+    )
+    # ONE string-id re-attach after the dedup, from the slim (didx,
+    # record_id) map — broadcast (a single ReusedExchange probed from both
+    # sides) when the map fits the budget, slim shuffle-hash joins
+    # otherwise. The didx twins ride on with the pair list: every scoring
+    # attach and the CC edge set key on them.
+    rel = records.select(F.col("didx").alias("_didx"), "record_id")
+    # Unknown records size -> slim shuffle-hash re-attach, never a hidden
+    # records.count() job inside plan construction: callers that hold the
+    # count (the pipeline's records stage) pass it and get the broadcast.
+    rel = (
+        F.broadcast(rel)
+        if n_records is not None and n_records <= config.records_broadcast_limit
+        else rel.hint("shuffle_hash")
+    )
+    lhs, rhs = rel.alias("_il"), rel.alias("_ir")
+    pairs = (
+        deduped
+        .join(lhs, F.col("left_didx") == F.col("_il._didx"), "inner")
+        .join(rhs, F.col("right_didx") == F.col("_ir._didx"), "inner")
+        .select(
+            F.col("_il.record_id").alias("left_id"),
+            F.col("_ir.record_id").alias("right_id"),
+            "left_didx",
+            "right_didx",
         )
-        # ONE string-id re-attach after the dedup, from the slim
-        # (didx, record_id) map — broadcast (a single ReusedExchange
-        # probed from both sides) when the map fits the budget, slim
-        # shuffle-hash joins otherwise.
-        rel = records.select(F.col("didx").alias("_didx"), "record_id")
-        # Unknown records size -> slim shuffle-hash re-attach, never a
-        # hidden records.count() job inside plan construction (ADVICE r4):
-        # callers that hold the count (run_pipeline's persist barrier)
-        # pass it and get the broadcast fast path.
-        rel = (
-            F.broadcast(rel)
-            if n_records is not None and n_records <= config.records_broadcast_limit
-            else rel.hint("shuffle_hash")
-        )
-        lhs, rhs = rel.alias("_il"), rel.alias("_ir")
-        pairs = (
-            deduped
-            .join(lhs, F.col("left_didx") == F.col("_il._didx"), "inner")
-            .join(rhs, F.col("right_didx") == F.col("_ir._didx"), "inner")
-            .select(
-                F.col("_il.record_id").alias("left_id"),
-                F.col("_ir.record_id").alias("right_id"),
-                "left_didx",
-                "right_didx",
-            )
-        )
-    else:
-        from identity_matching_spark.operators.compare import _rid64
-
-        pairs = (
-            quad_pairs.unionByName(star_pairs)
-            .dropDuplicates(["left_id", "right_id"])
-            .select(
-                "left_id",
-                "right_id",
-                _rid64(F.col("left_id")).alias("left_rid64"),
-                _rid64(F.col("right_id")).alias("right_rid64"),
-            )
-        )
+    )
     return BlockingResult(pairs=pairs, block_stats=block_stats)

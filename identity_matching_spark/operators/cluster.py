@@ -16,6 +16,13 @@ Catalyst can plan; converges in O(log n) rounds on real graphs.
   ``cc_iter_NNN`` — the resume path (north_rule: resumable from
   snapshot) restarts from the last complete iteration
   (tests/test_cluster_props.py::test_cc_durable_checkpoint_resume).
+* One finishing policy for both: once the edge set is at or below
+  ``config.cc_driver_finish_edges`` rows, the labeling finishes with one
+  collect + driver union-find. Graphs above it keep iterating (and, with
+  a checkpoint dir, keep their per-iteration snapshots).
+* The plans/pipeline runs CC on the dense ``didx`` longs; ids of either
+  type work, and ``clusters_with_singletons`` maps didx labels back to
+  record ids.
 * Convergence check piggybacks on the same job that materializes the
   iteration (count of changed labels).
 """
@@ -75,9 +82,9 @@ def _finish_in_driver(e: DataFrame) -> DataFrame:
     it is a few hundred thousand rows, each further distributed iteration
     is ~fixed scheduler/AQE latency over a few MB — driver-phase overhead
     that a real cluster pays too and that does not scale with executors.
-    Gated by ``config.cc_driver_finish_edges`` and used only on the
-    ephemeral (localCheckpoint) path; durable checkpointed runs keep the
-    pure distributed loop so crash-resume snapshots stay iteration-exact.
+    Gated by ``config.cc_driver_finish_edges`` on both the ephemeral and
+    the durable path; a graph above the gate keeps the distributed loop
+    and its iteration snapshots.
 
     Union-find with min-id-as-root + path compression: the component
     representative is the MIN record_id in string order — identical ids
@@ -209,14 +216,14 @@ def connected_components(
         e = _materialize(_canonical_edges(edges), 0)
         start_it = 1
     sig = _sig(e)
-    if ckpt is None and sig[0] <= config.cc_driver_finish_edges:
-        return _finish_in_driver(e)
     if ckpt is not None and not done:
         # fresh run: record the iteration-0 (canonical input) fingerprint
         import json as _json
 
         with open(manifest, "w") as fh:
             _json.dump({"n": sig[0], "h": str(sig[1])}, fh)
+    if sig[0] <= config.cc_driver_finish_edges:
+        return _finish_in_driver(e)
     for it in range(start_it, start_it + config.cc_max_iterations):
         e2 = _materialize(_small_star(_large_star(e)), it)
         sig2 = _sig(e2)
@@ -226,7 +233,7 @@ def connected_components(
         if sig2 == sig:
             break
         sig = sig2
-        if ckpt is None and sig[0] <= config.cc_driver_finish_edges:
+        if sig[0] <= config.cc_driver_finish_edges:
             # small enough: one collect replaces the remaining rounds
             return _finish_in_driver(e)
     # After convergence every edge points node -> component min.
@@ -237,15 +244,38 @@ def connected_components(
     )
 
 
-def clusters_with_singletons(records: DataFrame, assignments: DataFrame) -> DataFrame:
-    """All records; matched ones get their component id, rest self-clusters."""
-    return (
-        records.select("record_id")
-        .join(assignments, "record_id", "left")
-        .select(
-            "record_id",
-            F.coalesce("cluster_id", "record_id").alias("cluster_id"),
+def clusters_with_singletons(
+    records: DataFrame, assignments: DataFrame, key: str = "record_id"
+) -> DataFrame:
+    """All records as (record_id, cluster_id); matched ones get their
+    component id, the rest self-clusters.
+
+    ``assignments`` label the records by their ``key`` column. With
+    ``key="didx"`` (the pipeline's CC over dense ids) each label is mapped
+    back to its record_id: didx is the rank of record_id, so the min-didx
+    representative IS the min-record_id one."""
+    if key == "record_id":
+        return (
+            records.select("record_id")
+            .join(assignments, "record_id", "left")
+            .select(
+                "record_id",
+                F.coalesce("cluster_id", "record_id").alias("cluster_id"),
+            )
         )
+    idmap = records.select(key, "record_id")
+    rep = idmap.select(F.col(key).alias("_ck"), F.col("record_id").alias("_crid"))
+    return (
+        idmap
+        .join(
+            assignments.select(
+                F.col("record_id").alias(key), F.col("cluster_id").alias("_ck")
+            ),
+            key,
+            "left",
+        )
+        .join(rep, "_ck", "left")
+        .select("record_id", F.coalesce("_crid", "record_id").alias("cluster_id"))
     )
 
 

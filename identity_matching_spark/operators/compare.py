@@ -85,126 +85,52 @@ def _records_side(records_relation: DataFrame, n_records: int, limit: int):
     return records_relation.hint("shuffle_hash")
 
 
-def _rid64(col) -> Column:
-    """8-byte twin of a 64-char sha-hex id (first 15 nibbles) — the same
-    2^-60-collision equality class as normalize.H64_PAIRS. Join keys in
-    the broadcast attach are these longs: a dense long-keyed hash relation
-    whose probe array stays cache-resident, instead of hashing + comparing
-    64-byte strings per probe per pair."""
-    return F.conv(F.substring(col, 1, 15), 16, 10).cast("long")
-
-
 def attach_sides(
     pairs: DataFrame,
     records: DataFrame,
     n_records: int | None = None,
     broadcast_limit: int = RECORDS_BROADCAST_LIMIT,
     cols: list[str] | None = None,
-    keep_keys: bool = False,
 ) -> DataFrame:
-    """Join attributes onto both sides of the pair list.
+    """Join attributes onto both sides of the pair list, keyed on the dense
+    record ids: ``left_didx``/``right_didx`` on the pairs, ``didx`` on the
+    records (``normalize.with_dense_ids``).
 
     records is projected to the comparator columns first so the joined
-    payload is minimal (no content strings cross the wire). Small records
-    relations broadcast with long rid64 keys (zero pair-stream shuffles,
-    cache-resident probes); large ones shuffle-hash on record_id (two slim
-    shuffles — unavoidable for arbitrary pair lists).
+    payload is minimal (no content strings cross the wire). Every pair
+    column passes through; each side's attributes arrive as ``l_*``/``r_*``.
 
-    ``keep_keys=True`` retains the pair list's ``left_didx``/``right_didx``
-    twins in the output (when present) so downstream stages can stay in
-    8-byte longs — run_pipeline threads them through grading into the CC
-    edge set. Default False keeps the attached schema identical across all
-    key regimes (ADVICE r4)."""
+    Spark's LongHashedRelation turns the dense long key space into a
+    direct-address array (LongToUnsafeRowMap dense mode): each probe is one
+    indexed load instead of a hash-bucket walk. Small records relations
+    broadcast (zero pair-stream shuffles); large ones shuffle-hash (two
+    slim exchanges keyed on 8-byte longs — unavoidable for arbitrary pair
+    lists). Either way ONE relation is probed from both sides: the two join
+    children are the same plan subtree (only the SubqueryAlias differs,
+    which canonicalization strips), so the second broadcast is planned as a
+    ReusedExchange — one build, one in-memory copy per executor. The
+    broadcast relation is what the kernel hammers per pair, and a smaller
+    resident set is the difference between L3 hits and DRAM misses at high
+    thread counts. Column aliasing happens AFTER each join via qualified
+    refs, so no per-side projection breaks the subtree identity
+    (plan-asserted in test_fuzzy.py)."""
     cols = list(cols or ATTR_COLS)
+    side_cols = [c for c in cols if c != "record_id"]
     if n_records is None:
         n_records = records.count()
-    if n_records <= broadcast_limit:
-        # ONE shared broadcast relation probed from both sides (VERDICT r3
-        # #3): the two join children are the SAME plan subtree (only the
-        # SubqueryAlias differs, which canonicalization strips), so Spark
-        # plans the second BroadcastExchange as a ReusedExchange — one
-        # build, one in-memory copy per executor instead of two. Halving
-        # the probe working set matters beyond memory: the broadcast hash
-        # relation is what the kernel hammers per pair, and a smaller
-        # resident set is the difference between L3 hits and DRAM misses
-        # at high thread counts (the measured single-host scaling binder —
-        # BENCH/BASELINE.md memory-ceiling note). Column aliasing happens
-        # AFTER each join via qualified refs, so no per-side projection
-        # breaks the subtree identity. Plan-asserted in test_fuzzy.py.
-        side_cols = [c for c in cols if c != "record_id"]
-        # Key choice, best first:
-        # 1. DENSE ids (``didx`` on records + ``left_didx``/``right_didx``
-        #    on pairs, assigned by ``with_dense_ids``): Spark's
-        #    LongHashedRelation turns a dense long key space into a
-        #    direct-address array (LongToUnsafeRowMap dense mode) — each
-        #    probe is one indexed load instead of a hash-bucket walk, and
-        #    a pair list sorted by left_didx walks the row page near-
-        #    sequentially. This is the 100 TB shape: intern record ids to
-        #    dense longs once at the records table, carry them through
-        #    blocking.
-        # 2. stored rid64 twins (blocking emits them): probe keys straight
-        #    off the scan — no per-pair conv(substring(id)); sparse hash.
-        # 3. derive rid64 per pair from the string ids (compat).
-        if "left_didx" in pairs.columns and "didx" in records.columns:
-            key_expr = F.col("didx").cast("long").alias("rid64")
-            probed = pairs
-            lkey, rkey = F.col("left_didx"), F.col("right_didx")
-            out_cols = [
-                c for c in pairs.columns
-                if not c.endswith("_rid64")
-                and (keep_keys or not c.endswith("_didx"))
-            ]
-        elif "left_rid64" in pairs.columns:
-            key_expr = _rid64(F.col("record_id")).alias("rid64")
-            probed = pairs
-            lkey, rkey = F.col("left_rid64"), F.col("right_rid64")
-            out_cols = [c for c in pairs.columns if not c.endswith("_rid64")]
-        else:
-            key_expr = _rid64(F.col("record_id")).alias("rid64")
-            probed = pairs.withColumn("_lh64", _rid64(F.col("left_id"))).withColumn(
-                "_rh64", _rid64(F.col("right_id"))
-            )
-            lkey, rkey = F.col("_lh64"), F.col("_rh64")
-            out_cols = pairs.columns
-        rel = F.broadcast(records.select(key_expr, *[F.col(c) for c in side_cols]))
-        lhs, rhs = rel.alias("_atl"), rel.alias("_atr")
-        return (
-            probed
-            .join(lhs, lkey == F.col("_atl.rid64"), "inner")
-            .join(rhs, rkey == F.col("_atr.rid64"), "inner")
-            .select(
-                *[F.col(c) for c in out_cols],
-                *[F.col(f"_atl.{c}").alias(f"l_{c}") for c in side_cols],
-                *[F.col(f"_atr.{c}").alias(f"r_{c}") for c in side_cols],
-            )
-        )
-    if "left_didx" in pairs.columns and "didx" in records.columns:
-        # Arbitrary-scale arm with dense ids: the two slim exchanges key on
-        # 8-byte longs instead of 64-char id strings — same plan shape,
-        # ~8x less shuffle key bandwidth and long-vs-string hash probes.
-        lhs = records.select(
-            F.col("didx").alias("_ld"), *[F.col(c).alias(f"l_{c}") for c in cols]
-        ).hint("shuffle_hash")
-        rhs = records.select(
-            F.col("didx").alias("_rd"), *[F.col(c).alias(f"r_{c}") for c in cols]
-        ).hint("shuffle_hash")
-        dropped = ["_ld", "_rd", "l_record_id", "r_record_id"]
-        if not keep_keys:
-            dropped += ["left_didx", "right_didx"]
-        return (
-            pairs.join(lhs, F.col("left_didx") == F.col("_ld"), "inner")
-            .join(rhs, F.col("right_didx") == F.col("_rd"), "inner")
-            .drop(*dropped)
-        )
-    attrs = records.select(*cols)
-    lhs = attrs.select([F.col(c).alias(f"l_{c}") for c in cols]).hint("shuffle_hash")
-    rhs = attrs.select([F.col(c).alias(f"r_{c}") for c in cols]).hint("shuffle_hash")
+    rel = _records_side(
+        records.select("didx", *side_cols), n_records, broadcast_limit
+    )
+    lhs, rhs = rel.alias("_atl"), rel.alias("_atr")
     return (
-        pairs.join(lhs, pairs.left_id == lhs["l_record_id"], "inner")
-        .join(rhs, pairs.right_id == rhs["r_record_id"], "inner")
-        # drop the sparse rid64 twins too, so the attached schema is
-        # identical across all four arms (broadcast/shuffle x dense/sparse)
-        .drop("l_record_id", "r_record_id", "left_rid64", "right_rid64")
+        pairs
+        .join(lhs, F.col("left_didx") == F.col("_atl.didx"), "inner")
+        .join(rhs, F.col("right_didx") == F.col("_atr.didx"), "inner")
+        .select(
+            *[F.col(c) for c in pairs.columns],
+            *[F.col(f"_atl.{c}").alias(f"l_{c}") for c in side_cols],
+            *[F.col(f"_atr.{c}").alias(f"r_{c}") for c in side_cols],
+        )
     )
 
 
@@ -251,23 +177,19 @@ def comparator_flags() -> dict[str, Column]:
 
 
 def compare_pairs(
-    pairs: DataFrame, records: DataFrame, keep_keys: bool = False
+    pairs: DataFrame,
+    records: DataFrame,
+    n_records: int | None = None,
+    broadcast_limit: int = RECORDS_BROADCAST_LIMIT,
 ) -> DataFrame:
-    """pairs(left_id,right_id) -> scored-feature rows (one bool col per flag)."""
-    attached = attach_sides(pairs, records, keep_keys=keep_keys)
+    """pairs(left_id, right_id, left_didx, right_didx) -> the pair columns
+    plus one bool col per flag."""
+    attached = attach_sides(pairs, records, n_records, broadcast_limit)
     flags = comparator_flags()
-    key_cols = (
-        ["left_didx", "right_didx"]
-        if keep_keys and "left_didx" in attached.columns
-        else []
-    )
-    out = attached.select(
-        "left_id",
-        "right_id",
-        *key_cols,
+    return attached.select(
+        *pairs.columns,
         *[F.coalesce(expr, F.lit(False)).alias(name) for name, expr in flags.items()],
     )
-    return out
 
 
 # --- match messages (A3) ----------------------------------------------------
@@ -384,7 +306,10 @@ FUZZY_FLAG_NAMES = [
 
 
 def jw_stem_table(
-    pairs: DataFrame, records: DataFrame, n_records: int | None = None
+    pairs: DataFrame,
+    records: DataFrame,
+    n_records: int | None = None,
+    broadcast_limit: int = RECORDS_BROADCAST_LIMIT,
 ) -> DataFrame:
     """Jaro-Winkler + Levenshtein-ratio per DISTINCT unequal stem pair —
     not per candidate pair.
@@ -392,7 +317,7 @@ def jw_stem_table(
     Blocked candidate pairs repeat the same (l_stem, r_stem) combination
     millions of times (hot stems), so evaluating the pandas UDF per pair
     makes Arrow serde + Python workers the non-scaling fraction of the
-    scoring kernel. Instead: project a slim (id, stem) map, derive the
+    scoring kernel. Instead: project a slim (didx, stem) map, derive the
     distinct unequal stem pairs seen by the candidate list (map-side
     combine keeps that shuffle tiny), run the UDF once per distinct pair,
     and join the values back. The 100 TB pair stream never crosses the
@@ -414,53 +339,21 @@ def jw_stem_table(
         levenshtein_ratio,
     )
 
-    stems = records.select("record_id", "stem")
     if n_records is None:
         n_records = records.count()
-    if "left_didx" in pairs.columns and "didx" in records.columns:
-        # dense-id pair lists: stem maps keyed on didx — probes hit the
-        # dense long hash relation, no id-string hashing on this scan
-        l = _records_side(
-            records.select(F.col("didx").alias("left_didx"),
-                           F.col("stem").alias("_sl")),
-            n_records, RECORDS_BROADCAST_LIMIT,
+    # stem maps keyed on didx: probes hit the dense long hash relation, no
+    # id-string hashing on this scan
+    l, r = (
+        _records_side(
+            records.select(F.col("didx").alias(f"{side}_didx"), F.col("stem").alias(stem)),
+            n_records, broadcast_limit,
         )
-        r = _records_side(
-            records.select(F.col("didx").alias("right_didx"),
-                           F.col("stem").alias("_sr")),
-            n_records, RECORDS_BROADCAST_LIMIT,
-        )
-        joined = (
-            pairs.select("left_didx", "right_didx")
-            .join(l, "left_didx").join(r, "right_didx")
-        )
-    elif "left_rid64" in pairs.columns:
-        # pair lists from blocking carry 8-byte rid64 twins — key the stem
-        # maps on those so this scan never hashes 64-char id strings
-        l = _records_side(
-            stems.select(_rid64(F.col("record_id")).alias("left_rid64"),
-                         F.col("stem").alias("_sl")),
-            n_records, RECORDS_BROADCAST_LIMIT,
-        )
-        r = _records_side(
-            stems.select(_rid64(F.col("record_id")).alias("right_rid64"),
-                         F.col("stem").alias("_sr")),
-            n_records, RECORDS_BROADCAST_LIMIT,
-        )
-        joined = (
-            pairs.select("left_rid64", "right_rid64")
-            .join(l, "left_rid64").join(r, "right_rid64")
-        )
-    else:
-        l = _records_side(
-            stems.select(F.col("record_id").alias("left_id"), F.col("stem").alias("_sl")),
-            n_records, RECORDS_BROADCAST_LIMIT,
-        )
-        r = _records_side(
-            stems.select(F.col("record_id").alias("right_id"), F.col("stem").alias("_sr")),
-            n_records, RECORDS_BROADCAST_LIMIT,
-        )
-        joined = pairs.select("left_id", "right_id").join(l, "left_id").join(r, "right_id")
+        for side, stem in (("left", "_sl"), ("right", "_sr"))
+    )
+    joined = (
+        pairs.select("left_didx", "right_didx")
+        .join(l, "left_didx").join(r, "right_didx")
+    )
     return (
         joined
         .where(
@@ -493,7 +386,6 @@ def compare_pairs_fuzzy(
     records: DataFrame,
     config,
     jw_pairs: DataFrame | None = None,
-    keep_keys: bool = False,
 ) -> DataFrame:
     """Exact flag vector + fuzzy comparator flags.
 
@@ -523,19 +415,17 @@ def compare_pairs_fuzzy(
     else:
         enriched = enrich_phonetic(records)
     cols = ATTR_COLS + PHONETIC_H64_COLS
+    limit = config.records_broadcast_limit
     # Two O(1) counts drive every join choice below (same pattern as the
     # CC convergence check) — AQE would only downgrade an exchange after
     # the pair stream's map stage already ran.
     n_records = enriched.count()
     jwtab = jw_stem_table(
-        jw_pairs if jw_pairs is not None else pairs, enriched, n_records
+        jw_pairs if jw_pairs is not None else pairs, enriched, n_records, limit
     ).persist(StorageLevel.MEMORY_AND_DISK)
     n_jw = jwtab.count()
 
-    if (
-        n_records <= config.records_broadcast_limit
-        and n_jw <= config.jw_distinct_broadcast_limit
-    ):
+    if n_records <= limit and n_jw <= config.jw_distinct_broadcast_limit:
         # Broadcast regime: the whole kernel is ONE codegen pass over the
         # pair stream — scan -> 3 broadcast probes -> flags -> partial
         # agg, zero pair-stream exchanges. Attach attrs FIRST (the stem
@@ -546,10 +436,7 @@ def compare_pairs_fuzzy(
         # entirely; the (jh_lo, jh_hi) equality on hash hits pins the
         # match to the same 2^-64 h64 equality class the C3 comparator
         # itself uses — no strings ride the probe rows at all.
-        attached_aw = attach_sides(
-            pairs, enriched, n_records, config.records_broadcast_limit, cols=cols,
-            keep_keys=keep_keys,
-        )
+        attached_aw = attach_sides(pairs, enriched, n_records, limit, cols=cols)
         jwb = F.broadcast(jwtab.select(
             F.xxhash64("jh_lo", "jh_hi").alias("_jk"),
             "jh_lo", "jh_hi",
@@ -578,31 +465,20 @@ def compare_pairs_fuzzy(
             .drop("_jkp", "_jk", "jh_lo", "jh_hi")
         )
     else:
-        # Fallback regime (records side too big to broadcast): JW/lev
-        # values join onto the SLIM (ids, stems) pair projection BEFORE
-        # the wide attribute attach — the stem-pair join is a shuffle
-        # there, and shuffling the fully-attached stream (both sides'
-        # attrs incl. line-hash arrays, ~0.5-1 KB/pair) by stem pair
+        # Fallback regime (records side or JW table too big to broadcast):
+        # JW/lev values join onto the SLIM (didx, stems) pair projection
+        # BEFORE the wide attribute attach — the stem-pair join is a
+        # shuffle there, and shuffling the fully-attached stream (both
+        # sides' attrs incl. line-hash arrays, ~0.5-1 KB/pair) by stem pair
         # costs an order more bytes than shuffling (ids, stems).
-        stems = enriched.select("record_id", "stem")
-        sl = _records_side(
-            stems.select(F.col("record_id").alias("left_id"), F.col("stem").alias("_jl")),
-            n_records, config.records_broadcast_limit,
+        sl, sr = (
+            _records_side(
+                enriched.select(F.col("didx").alias(f"{side}_didx"), F.col("stem").alias(stem)),
+                n_records, limit,
+            )
+            for side, stem in (("left", "_jl"), ("right", "_jr"))
         )
-        sr = _records_side(
-            stems.select(F.col("record_id").alias("right_id"), F.col("stem").alias("_jr")),
-            n_records, config.records_broadcast_limit,
-        )
-        fb_keys = (
-            ["left_didx", "right_didx"]
-            if keep_keys and "left_didx" in pairs.columns
-            else []
-        )
-        pairs_stems = (
-            pairs.select("left_id", "right_id", *fb_keys)
-            .join(sl, "left_id")
-            .join(sr, "right_id")
-        )
+        pairs_stems = pairs.join(sl, "left_didx").join(sr, "right_didx")
         jw_side = (
             F.broadcast(jwtab)
             if n_jw <= config.jw_distinct_broadcast_limit
@@ -613,20 +489,8 @@ def compare_pairs_fuzzy(
             (F.least("_jl", "_jr") == jw_side["l_stem"])
             & (F.greatest("_jl", "_jr") == jw_side["r_stem"]),
             "left",
-        ).select("left_id", "right_id", *fb_keys, "jw_stem_val", "lev_stem_val")
-        lhs = (
-            enriched.select([F.col(c).alias(f"l_{c}") for c in cols])
-            .hint("shuffle_hash")
-        )
-        rhs = (
-            enriched.select([F.col(c).alias(f"r_{c}") for c in cols])
-            .hint("shuffle_hash")
-        )
-        attached = (
-            pairs_jw.join(rhs, pairs_jw.right_id == rhs["r_record_id"], "inner")
-            .join(lhs, pairs_jw.left_id == lhs["l_record_id"], "inner")
-            .drop("l_record_id", "r_record_id")
-        )
+        ).select(*pairs.columns, "jw_stem_val", "lev_stem_val")
+        attached = attach_sides(pairs_jw, enriched, n_records, limit, cols=cols)
     flags = comparator_flags()
     # same equality class as the C3 family comparator (stem_h64 twins)
     stems_equal = _eq(F.col("l_stem_h64"), F.col("r_stem_h64"))
@@ -636,13 +500,7 @@ def compare_pairs_fuzzy(
     # builtin per pair (same function, same inputs), without 90M DP runs.
     lev = F.when(stems_equal, F.lit(1.0)).otherwise(F.col("lev_stem_val"))
     out = attached.select(
-        "left_id",
-        "right_id",
-        *(
-            ["left_didx", "right_didx"]
-            if keep_keys and "left_didx" in attached.columns
-            else []
-        ),
+        *pairs.columns,
         *[F.coalesce(expr, F.lit(False)).alias(name) for name, expr in flags.items()],
         F.coalesce(_eq(F.col("l_cologne_h64"), F.col("r_cologne_h64")), F.lit(False)).alias(
             "cologne_given_match"

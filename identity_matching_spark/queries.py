@@ -31,7 +31,7 @@ from identity_matching_spark.operators.cluster import (
 )
 from identity_matching_spark.operators.compare import compare_pairs
 from identity_matching_spark.operators.grade import grade_pairs
-from identity_matching_spark.operators.normalize import normalize_files
+from identity_matching_spark.operators.normalize import normalize_files, with_dense_ids
 from identity_matching_spark.sources.tables import files_from_documents, load_table
 
 # SQL-checkable configuration: families DuckDB can reproduce; guards off so
@@ -74,14 +74,19 @@ def _records(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _pairs(spark: SparkSession, sf_dir: str):
-    records = _records(spark, sf_dir)
+    """Records with dense ids, and the uncapped SQL_CONFIG pair union with
+    its didx twins (blocking_keys passes didx through), which the scoring
+    attach keys on."""
+    records = with_dense_ids(_records(spark, sf_dir))
     keyed = blocking_keys(records, SQL_CONFIG)
-    l = keyed.select("blocking_key", F.col("record_id").alias("left_id"))
-    r = keyed.select("blocking_key", F.col("record_id").alias("right_id"))
+    l = keyed.select("blocking_key", F.col("record_id").alias("left_id"),
+                     F.col("didx").alias("left_didx"))
+    r = keyed.select("blocking_key", F.col("record_id").alias("right_id"),
+                     F.col("didx").alias("right_didx"))
     pairs = (
         l.join(r, "blocking_key")
         .filter(F.col("left_id") < F.col("right_id"))
-        .select("left_id", "right_id")
+        .select("left_id", "right_id", "left_didx", "right_didx")
         .dropDuplicates(["left_id", "right_id"])
     )
     return records, pairs
@@ -89,7 +94,7 @@ def _pairs(spark: SparkSession, sf_dir: str):
 
 def _scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     records, pairs = _pairs(spark, sf_dir)
-    return grade_pairs(compare_pairs(pairs, records))
+    return grade_pairs(compare_pairs(pairs, records)).drop("left_didx", "right_didx")
 
 
 # --- ER core -----------------------------------------------------------------
@@ -110,7 +115,7 @@ def q_blocking_keys(spark, sf_dir):
 def q_candidate_pairs(spark, sf_dir):
     """J1 self-equi-join + A4 dedup (candidates found under >=1 key)."""
     _, pairs = _pairs(spark, sf_dir)
-    return pairs
+    return pairs.select("left_id", "right_id")
 
 
 def q_scored_pairs(spark, sf_dir):

@@ -30,6 +30,20 @@ def driver_memory() -> str:
     return f"{max(1, min(24, int(kb * 0.4 / 2**20)))}g"
 
 
+def default_cpus() -> int:
+    """Local-mode cores: ``SPARK_GRAFT_CPUS`` when set, else the cores this
+    process may run on (its CPU affinity mask, not the machine's count)."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
+
+
+def package_pythonpath() -> str:
+    """Python workers' import path: the directory holding this package,
+    ahead of any PYTHONPATH already set, so pandas UDFs defined in the
+    package import from any working directory."""
+    parent = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    return os.pathsep.join(p for p in (parent, os.environ.get("PYTHONPATH")) if p)
+
+
 def build_session(
     app_name: str = "identity_matching_spark",
     cpus: int | None = None,
@@ -37,7 +51,7 @@ def build_session(
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cpus = default_cpus()
     if shuffle_partitions is None:
         # 2x cores: finer tasks even out stragglers; AQE re-coalesces
         # anything that ends up too small.
@@ -84,6 +98,7 @@ def build_session(
         .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.executorEnv.PYTHONPATH", package_pythonpath())
     )
     if master:
         builder = builder.master(master)

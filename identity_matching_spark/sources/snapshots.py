@@ -158,6 +158,19 @@ class SnapshotStore:
         with open(self._lineage_path, "a") as fh:
             fh.write(json.dumps(row) + "\n")
 
+    def rows_out(self, stage: str) -> int | None:
+        """``rows_out`` of the stage's latest lineage row, read straight
+        from the log file (no Spark job); None when no row was logged."""
+        if not os.path.exists(self._lineage_path):
+            return None
+        rows = None
+        with open(self._lineage_path) as fh:
+            for line in fh:
+                row = json.loads(line)
+                if row.get("stage") == stage:
+                    rows = row.get("rows_out")
+        return rows
+
     def lineage(self) -> DataFrame | None:
         if not os.path.exists(self._lineage_path):
             return None

@@ -33,7 +33,9 @@ def new_since(records: DataFrame, processed_ids: DataFrame) -> DataFrame:
 def incremental_pairs(
     all_records: DataFrame, new_records: DataFrame, config: MatchConfig
 ) -> DataFrame:
-    """Candidate pairs touching at least one NEW record.
+    """Candidate pairs ``(left_id, right_id, left_didx, right_didx)``
+    touching at least one NEW record; ``all_records`` carries the dense ids
+    of ``normalize.with_dense_ids``.
 
     Blocking keys are computed for the full corpus (cheap projection), but
     the pair join is new-keys × all-keys — linear in the delta, not
@@ -42,14 +44,19 @@ def incremental_pairs(
     all_keyed = blocking_keys(all_records, config)
     new_ids = new_records.select("record_id")
     new_keyed = all_keyed.join(new_ids, "record_id", "left_semi")
-    l = new_keyed.select("blocking_key", F.col("record_id").alias("left_id"))
-    r = all_keyed.select("blocking_key", F.col("record_id").alias("right_id"))
+    l = new_keyed.select("blocking_key", F.col("record_id").alias("_a"),
+                         F.col("didx").alias("_ad"))
+    r = all_keyed.select("blocking_key", F.col("record_id").alias("_b"),
+                         F.col("didx").alias("_bd"))
     return (
         l.join(r, "blocking_key")
-        .filter(F.col("left_id") != F.col("right_id"))
+        .filter(F.col("_a") != F.col("_b"))
+        # didx is the rank of record_id: least/greatest pick the same side
         .select(
-            F.least("left_id", "right_id").alias("left_id"),
-            F.greatest("left_id", "right_id").alias("right_id"),
+            F.least("_a", "_b").alias("left_id"),
+            F.greatest("_a", "_b").alias("right_id"),
+            F.least("_ad", "_bd").alias("left_didx"),
+            F.greatest("_ad", "_bd").alias("right_didx"),
         )
         .dropDuplicates(["left_id", "right_id"])
     )
@@ -60,4 +67,4 @@ def incremental_score(
 ) -> DataFrame:
     """Score only the delta pairs — the event-driven MDM re-link analog."""
     pairs = incremental_pairs(all_records, new_records, config)
-    return grade_pairs(compare_pairs(pairs, all_records))
+    return grade_pairs(compare_pairs(pairs, all_records)).drop("left_didx", "right_didx")

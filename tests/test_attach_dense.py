@@ -1,9 +1,9 @@
-"""Dense-id (didx) probe path: attach_sides keyed on interned dense longs
-must produce exactly the rows the rid64/string-id paths produce."""
+"""Dense record ids (didx): interning is dense, deterministic and
+width-independent, and blocking emits them as the pair key. Scored rows
+over didx keys are checked against DuckDB in test_oracle_parity.py."""
 
-from pyspark.sql import functions as F
+import pytest
 
-from identity_matching_spark.operators.compare import compare_pairs
 from identity_matching_spark.operators.normalize import normalize_files, with_dense_ids
 
 
@@ -26,40 +26,10 @@ def test_dense_ids_are_dense_and_deterministic(spark):
     assert [by_id[i] for i in ids] == list(range(7))
 
 
-def test_dense_attach_equals_string_attach(spark):
-    files = spark.createDataFrame(
-        [
-            ("r1", "src/io/smith.py", "a" * 40, "python", "alpha beta"),
-            ("r2", "src/io/smyth.py", "b" * 40, "python", "alpha beta delta"),
-            ("r3", "lib/db/runner.py", "c" * 40, "go", "other content"),
-        ],
-        ["repo", "path", "commit", "lang", "content"],
-    )
-    recs = with_dense_ids(normalize_files(files))
-    ids = sorted(r["record_id"] for r in recs.select("record_id").collect())
-    pairs = spark.createDataFrame(
-        [(ids[0], ids[1]), (ids[0], ids[2]), (ids[1], ids[2])],
-        ["left_id", "right_id"],
-    )
-    m = recs.select("record_id", "didx")
-    pairs_dense = (
-        pairs
-        .join(m.select(F.col("record_id").alias("left_id"),
-                       F.col("didx").alias("left_didx")), "left_id")
-        .join(m.select(F.col("record_id").alias("right_id"),
-                       F.col("didx").alias("right_didx")), "right_id")
-        .select("left_id", "right_id", "left_didx", "right_didx")
-    )
-    via_strings = compare_pairs(pairs, recs.drop("didx"))
-    via_dense = compare_pairs(pairs_dense, recs)
-    assert via_dense.columns == via_strings.columns
-    assert _rows(via_dense) == _rows(via_strings)
-
-
 def test_production_blocking_carries_didx(spark):
-    """candidate_pairs must emit left_didx/right_didx when the records
-    relation carries didx, so the production scoring attach takes the
-    dense-id probe path (the same path the kernel bench measures)."""
+    """candidate_pairs emits left_didx/right_didx matching the records'
+    didx — the key every scoring attach and the CC edge set use — and
+    refuses records without dense ids instead of mixing key schemes."""
     from identity_matching_spark.config import MatchConfig
     from identity_matching_spark.operators.blocking import candidate_pairs
 
@@ -75,9 +45,8 @@ def test_production_blocking_carries_didx(spark):
     for row in res.pairs.collect():
         assert row["left_didx"] == by_id[row["left_id"]]
         assert row["right_didx"] == by_id[row["right_id"]]
-    # didx-less records keep the slim rid64-only pair schema
-    res2 = candidate_pairs(recs.drop("didx"), MatchConfig())
-    assert "left_didx" not in res2.pairs.columns
+    with pytest.raises(ValueError, match="with_dense_ids"):
+        candidate_pairs(recs.drop("didx"), MatchConfig())
 
 
 def test_with_dense_ids_scales_without_global_window(spark):

@@ -6,11 +6,12 @@ from pyspark.sql import functions as F
 
 from identity_matching_spark.config import MatchConfig
 from identity_matching_spark.operators.blocking import candidate_pairs
-from identity_matching_spark.operators.normalize import normalize_files
+from identity_matching_spark.operators.normalize import normalize_files, with_dense_ids
 
 
-def _files(spark, rows):
-    return spark.createDataFrame(rows, ["repo", "path", "commit", "lang", "content"])
+def _records(spark, rows):
+    files = spark.createDataFrame(rows, ["repo", "path", "commit", "lang", "content"])
+    return with_dense_ids(normalize_files(files))
 
 
 @pytest.fixture(scope="module")
@@ -25,7 +26,7 @@ def tiny_cfg():
 
 def test_small_blocks_full_quadratic(spark, tiny_cfg):
     rows = [(f"r{i}", "a/b/same.py", f"{i:040x}", "python", f"content {i}") for i in range(4)]
-    recs = normalize_files(_files(spark, rows))
+    recs = _records(spark, rows)
     res = candidate_pairs(recs, tiny_cfg)
     # 4 records share the name_prefix block -> C(4,2)=6 pairs
     assert res.pairs.count() == 6
@@ -36,7 +37,7 @@ def test_identity_star_shortcut(spark, tiny_cfg):
     # 6 identical-content records: content_sha block above star threshold 4
     # -> star edges (5 pairs hub->member), not C(6,2)=15 from that family.
     rows = [(f"r{i}", f"d{i}/x{i}.py", f"{i:040x}", "python", "same content") for i in range(6)]
-    recs = normalize_files(_files(spark, rows))
+    recs = _records(spark, rows)
     cfg = tiny_cfg.with_(blocking_families=("content_sha",))
     res = candidate_pairs(recs, cfg)
     assert res.pairs.count() == 5
@@ -49,7 +50,7 @@ def test_identity_star_shortcut(spark, tiny_cfg):
 
 def test_oversized_nonidentity_block_subsalted_and_reported(spark, tiny_cfg):
     rows = [(f"r{i}", "a/b/same.py", f"{i:040x}", "python", f"content {i}") for i in range(12)]
-    recs = normalize_files(_files(spark, rows))
+    recs = _records(spark, rows)
     cfg = tiny_cfg.with_(blocking_families=("name_prefix",))
     res = candidate_pairs(recs, cfg)
     # block size 12 > cap 10 -> split into k=2 hash-sub-blocks: fewer than
@@ -71,7 +72,7 @@ def test_salted_hot_key_pairs_complete(spark):
         salt_buckets=2,  # salt threshold = 16
     )
     rows = [(f"r{i}", "a/b/hot.py", f"{i:040x}", "python", f"content {i}") for i in range(20)]
-    recs = normalize_files(_files(spark, rows))
+    recs = _records(spark, rows)
     res = candidate_pairs(recs, cfg)
     n = res.pairs.count()
     assert n == 20 * 19 // 2
@@ -85,6 +86,6 @@ def test_pair_dedup_across_families(spark):
         ("r2", "a/b/x.py", "1" * 40, "python", "identical"),
     ]
     cfg = MatchConfig(blocking_families=("content_sha", "norm_sha", "name_prefix"))
-    recs = normalize_files(_files(spark, rows))
+    recs = _records(spark, rows)
     res = candidate_pairs(recs, cfg)
     assert res.pairs.count() == 1

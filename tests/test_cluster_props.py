@@ -104,7 +104,8 @@ def test_cc_durable_checkpoint_resume(spark, tmp_path):
         for r in connected_components(edges, MatchConfig()).collect()
     }
     d = str(tmp_path / "cc")
-    cfg = MatchConfig(checkpoint_dir=d)
+    # no driver finish: the loop and its iteration snapshots stay under test
+    cfg = MatchConfig(checkpoint_dir=d, cc_driver_finish_edges=0)
     durable = {
         (r["record_id"], r["cluster_id"])
         for r in connected_components(edges, cfg).collect()
@@ -131,7 +132,8 @@ def test_cc_checkpoint_invalidated_on_different_edges(spark, tmp_path):
     clusters correctly (previously it silently emitted clusters for the
     wrong graph, including record_ids absent from the new data)."""
     d = str(tmp_path / "cc")
-    cfg = MatchConfig(checkpoint_dir=d)
+    # no driver finish: the loop and its iteration snapshots stay under test
+    cfg = MatchConfig(checkpoint_dir=d, cc_driver_finish_edges=0)
     graph_a = spark.createDataFrame(
         [("a1", "a2"), ("a2", "a3"), ("a4", "a5")], ["left_id", "right_id"]
     )

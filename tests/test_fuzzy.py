@@ -7,18 +7,28 @@ from pyspark.sql import functions as F
 from identity_matching_spark.config import MatchConfig
 from identity_matching_spark.operators.compare import (
     FUZZY_FLAG_NAMES,
+    compare_pairs,
     compare_pairs_fuzzy,
     enrich_phonetic,
 )
 from identity_matching_spark.operators.grade import grade_pairs
-from identity_matching_spark.operators.normalize import normalize_files
+from identity_matching_spark.operators.normalize import normalize_files, with_dense_ids
 
 CFG = MatchConfig()
 
 
 def _recs(spark, rows):
     files = spark.createDataFrame(rows, ["repo", "path", "commit", "lang", "content"])
-    return normalize_files(files)
+    return with_dense_ids(normalize_files(files))
+
+
+def _pairs(spark, recs, id_pairs):
+    """Hand-built pair list with the didx twins the scoring attach keys on."""
+    didx = {r["record_id"]: r["didx"] for r in recs.select("record_id", "didx").collect()}
+    return spark.createDataFrame(
+        [(a, b, didx[a], didx[b]) for a, b in id_pairs],
+        "left_id string, right_id string, left_didx long, right_didx long",
+    )
 
 
 @pytest.fixture(scope="module")
@@ -33,13 +43,10 @@ def scored(spark):
     recs = _recs(spark, rows)
     ids = recs.select("record_id", "path").collect()
     by_path = {r["path"]: r["record_id"] for r in ids}
-    pairs = spark.createDataFrame(
-        [
-            tuple(sorted([by_path["src/io/smith.py"], by_path["src/io/smyth.py"]])),
-            tuple(sorted([by_path["src/io/smith.py"], by_path["lib/db/runner.py"]])),
-        ],
-        ["left_id", "right_id"],
-    )
+    pairs = _pairs(spark, recs, [
+        tuple(sorted([by_path["src/io/smith.py"], by_path["src/io/smyth.py"]])),
+        tuple(sorted([by_path["src/io/smith.py"], by_path["lib/db/runner.py"]])),
+    ])
     out = grade_pairs(compare_pairs_fuzzy(pairs, recs, CFG))
     rows_out = {(r["left_id"], r["right_id"]): r for r in out.collect()}
     smith_smyth = tuple(sorted([by_path["src/io/smith.py"], by_path["src/io/smyth.py"]]))
@@ -104,8 +111,42 @@ def test_kernel_plan_is_shuffle_free_in_broadcast_regime(spark):
     ]
     recs = _recs(spark, rows)
     ids = sorted(r["record_id"] for r in recs.select("record_id").collect())
-    pairs = spark.createDataFrame([tuple(ids)], ["left_id", "right_id"])
+    pairs = _pairs(spark, recs, [tuple(ids)])
     scored = grade_pairs(compare_pairs_fuzzy(pairs, recs, CFG))
     plan = scored._jdf.queryExecution().executedPlan().toString()
     assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan
     assert plan.count("BroadcastHashJoin") >= 4  # stems x2, jw table, attrs x2
+
+
+def test_shuffle_hash_regime_equals_broadcast_regime(spark):
+    """With both broadcast limits at 0 the attaches, the stem maps and the
+    JW table join shuffle-hash on the didx keys; every scored row must equal
+    the broadcast regime's."""
+    recs = _recs(spark, [
+        ("r1", "src/io/smith.py", "a" * 40, "python", "alpha beta gamma"),
+        ("r2", "src/io/smyth.py", "b" * 40, "python", "alpha beta gamma delta"),
+        ("r3", "lib/db/runner.py", "c" * 40, "go", "totally different content here"),
+        ("r4", "src/io/smith.py", "d" * 40, "python", "alpha beta gamma"),
+        ("r5", "src/db/smithe.py", "e" * 40, "python", "alpha"),
+    ])
+    ids = sorted(r["record_id"] for r in recs.select("record_id").collect())
+    pairs = _pairs(spark, recs, [(a, b) for i, a in enumerate(ids) for b in ids[i + 1:]])
+    shuffled = CFG.with_(records_broadcast_limit=0, jw_distinct_broadcast_limit=0)
+    rows = lambda df: sorted(tuple(r) for r in df.collect())  # noqa: E731
+
+    exact_b = compare_pairs(pairs, recs)
+    exact_s = compare_pairs(pairs, recs, broadcast_limit=0)
+    plan = exact_s._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("ShuffledHashJoin") >= 2  # both attach sides
+    assert exact_s.columns == exact_b.columns
+    assert rows(exact_s) == rows(exact_b)
+
+    fuzzy_b = compare_pairs_fuzzy(pairs, recs, CFG)
+    fuzzy_s = compare_pairs_fuzzy(pairs, recs, shuffled)
+    plan = fuzzy_s._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("ShuffledHashJoin") >= 5  # stems x2, jw table, attrs x2
+    assert fuzzy_s.columns == fuzzy_b.columns
+    assert rows(fuzzy_s) == rows(fuzzy_b)
+    assert len(rows(fuzzy_b)) == 10
+    for df in (fuzzy_b, fuzzy_s):
+        df.jw_stem_cache.unpersist()

@@ -43,7 +43,11 @@ def _normalized(df: pd.DataFrame) -> pd.DataFrame:
     return df.sort_values(list(df.columns)).reset_index(drop=True)
 
 
-@pytest.mark.parametrize("name", ["scored_pairs_fuzzy", "match_messages"])
+# scored_pairs and pipeline_full_portable score over the didx-keyed attach
+# (the only key the engine has) and check it value-exact against DuckDB.
+@pytest.mark.parametrize(
+    "name", ["scored_pairs_fuzzy", "match_messages", "scored_pairs", "pipeline_full_portable"]
+)
 def test_query_matches_oracle(spark, name):
     q = entry.queries()[name]
     sql = entry.oracle_sql()[name]

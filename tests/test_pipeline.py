@@ -115,16 +115,29 @@ def test_entity_recovery_quality(spark, corpus, result):
     assert f1 > 0.5  # informational floor; decision-parity gate is the real one
 
 
-def test_didx_cc_pipeline_equivalence(spark, corpus, result):
-    """The dense-id regime routes the CC edge set through 8-byte didx
-    twins (run_pipeline keep_keys path) and maps representatives back via
-    the id map; the string regime clusters on record_id directly. The two
-    must produce bit-identical cluster assignments, and the didx twins
-    must never leak into the exposed scored schema."""
-    files = corpus.drop("entity_id")
+def test_didx_cc_pipeline_equivalence(result):
+    """The pipeline runs CC on the didx twins and maps representatives back
+    to record ids. Its assignment must equal a driver union-find over the
+    scored pairs with score >= cluster_threshold, every record included
+    (singletons cluster alone; the cluster id is the min member), and the
+    didx twins must never leak into the exposed scored schema."""
     assert "left_didx" not in result.scored_pairs.columns
-    res_str = run_pipeline(files, MatchConfig(dense_ids=False))
-    a = {(r["record_id"], r["cluster_id"]) for r in result.clusters.collect()}
-    b = {(r["record_id"], r["cluster_id"]) for r in res_str.clusters.collect()}
-    assert a == b
-    res_str.cleanup()
+    ids = [r["record_id"] for r in result.records.select("record_id").collect()]
+    parent = {x: x for x in ids}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    edges = result.scored_pairs.filter(
+        F.col("score") >= MatchConfig().cluster_threshold
+    ).select("left_id", "right_id")
+    for left, right in edges.collect():
+        a, b = find(left), find(right)
+        if a != b:  # the smaller root wins, so every root is its component's min
+            parent[max(a, b)] = min(a, b)
+    want = {(x, find(x)) for x in ids}
+    got = {(r["record_id"], r["cluster_id"]) for r in result.clusters.collect()}
+    assert got == want

@@ -15,7 +15,7 @@ from identity_matching_spark.operators.validate import (
     tier_expr,
     validation_gate,
 )
-from identity_matching_spark.plans.pipeline import run_checkpointed, run_pipeline
+from identity_matching_spark.plans.pipeline import run_pipeline
 
 CFG = MatchConfig(enable_fuzzy=False)
 
@@ -114,7 +114,7 @@ def test_gate_keeps_exactly_rows_ranked_at_level(spark):
 def test_gate_compiles_without_codegen_fallback(spark, tmp_path):
     """With codegen fallback off, a generated method over the JVM's 64 KB
     limit fails the query instead of silently running interpreted: both
-    production paths must compile the gate into the normalize stage."""
+    run modes must compile the gate into the normalize stage."""
     files = generate_files(spark, 20).drop("entity_id")
 
     def shape(records, clusters):
@@ -129,8 +129,8 @@ def test_gate_compiles_without_codegen_fallback(spark, tmp_path):
             want = shape(res.records, res.clusters)
         finally:
             res.cleanup()
-        out = run_checkpointed(spark, files, MatchConfig(), str(tmp_path / "ckpt"))
-        assert shape(out["records"], out["clusters"]) == want
+        out = run_pipeline(files, MatchConfig(), checkpoint_dir=str(tmp_path / "ckpt"))
+        assert shape(out.records, out.clusters) == want
         assert want[0] == want[1] > 0
     finally:
         spark.conf.set("spark.sql.codegen.fallback", prev)

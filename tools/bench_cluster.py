@@ -137,11 +137,14 @@ def main() -> int:
     # local[32] prep JVM exited, vs ~40 true capacity — same transient the
     # leg harness settles through at its boundaries). Wait until two
     # consecutive medians agree within 5%.
+    # The window still opens if they never do, but the record says so.
     prev_c = hw_calibration_med(HI, reps=3)
+    settle_converged = False
     for _ in range(10):
         time.sleep(15)
         cur = hw_calibration_med(HI, reps=3)
         if abs(cur / prev_c - 1.0) <= 0.05:
+            settle_converged = True
             break
         prev_c = cur
 
@@ -155,6 +158,7 @@ def main() -> int:
         "launch": "spark-submit --py-files identity_matching_spark.zip bench.py",
         "started_utc": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
         "cal_start": cal_s, "ceiling_start": ceiling_s,
+        "settle_converged": settle_converged,
         "accepted": False, "reject_reason": None,
     }
 

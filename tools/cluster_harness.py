@@ -80,10 +80,26 @@ class StandaloneCluster:
         self.pin = pin and shutil.which("taskset") is not None
         self.log_dir = log_dir
         self._procs: list[subprocess.Popen] = []
+        self._logs: list = []  # log files the JVMs write to, closed on exit
         self._tmp: tempfile.TemporaryDirectory | None = None
         self.master_url: str | None = None
 
     def __enter__(self) -> "StandaloneCluster":
+        try:
+            self._start()
+        except BaseException:
+            self.__exit__(None, None, None)  # stop the JVMs already launched
+            raise
+        return self
+
+    def _launch(self, cmd: list[str], log: str, env: dict) -> subprocess.Popen:
+        fh = open(log, "w")
+        self._logs.append(fh)
+        proc = subprocess.Popen(cmd, stdout=fh, stderr=subprocess.STDOUT, env=env)
+        self._procs.append(proc)
+        return proc
+
+    def _start(self) -> None:
         self._tmp = tempfile.TemporaryDirectory(prefix="ims_cluster_")
         base = self.log_dir or self._tmp.name
         os.makedirs(base, exist_ok=True)
@@ -98,14 +114,12 @@ class StandaloneCluster:
         port = _free_port()
         self.master_url = f"spark://127.0.0.1:{port}"
         mlog = os.path.join(base, "master.log")
-        self._procs.append(
-            subprocess.Popen(
-                [SPARK_CLASS, "org.apache.spark.deploy.master.Master",
-                 "-h", "127.0.0.1", "-p", str(port), "--webui-port", "0"],
-                stdout=open(mlog, "w"), stderr=subprocess.STDOUT, env=env,
-            )
+        master = self._launch(
+            [SPARK_CLASS, "org.apache.spark.deploy.master.Master",
+             "-h", "127.0.0.1", "-p", str(port), "--webui-port", "0"],
+            mlog, env,
         )
-        _wait_for(mlog, "I have been elected leader", 60, self._procs[0], "master")
+        _wait_for(mlog, "I have been elected leader", 60, master, "master")
         for i in range(self.n_workers):
             wlog = os.path.join(base, f"worker{i}.log")
             cmd = [SPARK_CLASS, "org.apache.spark.deploy.worker.Worker",
@@ -116,15 +130,11 @@ class StandaloneCluster:
                 lo = i * self.cores_per_worker
                 hi = lo + self.cores_per_worker - 1
                 cmd = ["taskset", "-c", f"{lo}-{hi}"] + cmd
-            self._procs.append(
-                subprocess.Popen(cmd, stdout=open(wlog, "w"),
-                                 stderr=subprocess.STDOUT, env=env)
-            )
+            self._launch(cmd, wlog, env)
         for i in range(self.n_workers):
             _wait_for(os.path.join(base, f"worker{i}.log"),
                       "Successfully registered", 60,
                       self._procs[i + 1], f"worker{i}")
-        return self
 
     def __exit__(self, *exc) -> None:
         for p in reversed(self._procs):
@@ -135,6 +145,9 @@ class StandaloneCluster:
             except subprocess.TimeoutExpired:
                 p.kill()
         self._procs.clear()
+        for fh in self._logs:
+            fh.close()
+        self._logs.clear()
         if self._tmp is not None:
             self._tmp.cleanup()
             self._tmp = None
