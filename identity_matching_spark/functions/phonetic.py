@@ -4,8 +4,11 @@ The reference deployment configures COLOGNE (given name) and SOUNDEX
 (family name); HAPI's matcher slot also offers METAPHONE. Spark has a
 builtin ``F.soundex``; Cologne ("Kölner Phonetik", Postel 1969) and a
 basic Metaphone are implemented here from their public algorithm
-descriptions and exposed as **batched pandas UDFs** (Arrow transfer, no
-per-row Python serde)."""
+descriptions as plain Python functions. ``compare.enrich_phonetic``
+applies them once per distinct normalized value: on the driver while the
+vocabulary is under ``config.DRIVER_FINISH_ROWS`` values, else through
+the **batched pandas UDF** wrappers below (Arrow transfer, no per-row
+Python serde)."""
 
 from __future__ import annotations
 

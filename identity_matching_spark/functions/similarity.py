@@ -3,10 +3,14 @@ Jaro-Winkler, Levenshtein; mdm-rules.json:30,38 'matcher.algorithm').
 
 * ``levenshtein_ratio`` — pure Column: Spark's builtin edit distance
   normalized to 1 - dist/max_len. Stays in codegen.
-* ``jaro_winkler_udf`` — batched pandas UDF over struct-zipped string
-  pairs (Arrow transfer; the only Python on the scoring path, applied
-  AFTER cheap exact filters so Catalyst keeps scans/filters below the
-  Python barrier — SURVEY.md §4.4).
+* ``jaro_winkler`` — plain Python, evaluated once per DISTINCT unequal
+  stem pair (``compare.jw_stem_table``): on the driver while that table
+  is under ``config.DRIVER_FINISH_ROWS`` rows, so the default scoring
+  path runs no Python worker at all.
+* ``jaro_winkler_udf`` — the same function as a batched pandas UDF
+  (Arrow transfer) for a distinct-pair table above that limit, applied
+  AFTER the cheap exact filters and the distinct so Catalyst keeps
+  scans/filters below the Python barrier (SURVEY.md §4.4).
 """
 
 from __future__ import annotations
@@ -76,23 +80,13 @@ def jaro_winkler(s1: str | None, s2: str | None) -> float | None:
     return jaro + prefix * 0.1 * (1 - jaro)
 
 
-from functools import lru_cache
-
-
-@lru_cache(maxsize=1 << 20)
-def _jw_cached(a: str, b: str) -> float:
-    return jaro_winkler(a, b)
-
-
 @F.pandas_udf(T.DoubleType())
 def jaro_winkler_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Batched JW with per-worker memoization: blocked candidate pairs
-    repeat the same attribute pairs millions of times (hot stems), so the
-    LRU turns the dominant Python cost into dict lookups."""
-    f = _jw_cached
+    """Batched JW over a distinct-pair table (no pair repeats, so nothing
+    to memoize)."""
     return pd.Series(
         [
-            None if (x is None or y is None) else f(x, y)
+            None if (x is None or y is None) else jaro_winkler(x, y)
             for x, y in zip(a.tolist(), b.tolist())
         ],
         dtype="float64",

@@ -28,10 +28,18 @@ Scale design (the part Catalyst cannot invent, SURVEY.md §4):
   backstop, and the key space is pre-spread with
   ``repartition(blocking_key)`` so the pair join and the dedup reuse
   one shuffle.
+* **Guard keys on the driver.** The guarded (oversized, starred or hot)
+  key set is collected once; up to ``config.DRIVER_FINISH_ROWS`` keys it
+  comes back as a broadcast local relation, ``block_stats`` is built from
+  it, and only the sub-salt, hot-salt and star branches that have keys
+  are planned (none when no block is guarded). The collect is also the
+  materialization barrier of the persisted key table. A larger guard set
+  keeps the distributed relation and every branch.
 """
 
 from __future__ import annotations
 
+import functools
 from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame
@@ -44,6 +52,7 @@ from identity_matching_spark.functions.hashing import (
     word_shingles,
 )
 from identity_matching_spark.functions.normalize import hapi_norm
+from identity_matching_spark.operators.driver_finish import collect_small, local_relation
 
 # Families whose key alone implies a 0.99-grade match (strong identifiers).
 IDENTITY_FAMILIES = {"content_sha", "file_id"}
@@ -151,16 +160,11 @@ def candidate_pairs(
             "operators.normalize.with_dense_ids first (a checkpoint dir written "
             "before dense ids must be cleared, not resumed)"
         )
-    # keyed feeds three consumers (size count + both join sides) — persist
-    # so key derivation (incl. MinHash) runs once. At cluster scale this is
-    # the derived blocking-key table an Iceberg deployment would write out.
+
+    # keyed feeds the size count and both join sides — persist so key
+    # derivation (incl. MinHash) runs once. At cluster scale this is the
+    # derived blocking-key table an Iceberg deployment would write out.
     keyed = blocking_keys(records, config).persist(StorageLevel.MEMORY_AND_DISK)
-    # Materialization barrier: the pair query below references keyed from
-    # ~8 leaf stages (sizes broadcast, quad l/r, sub, salted l/r, hubs,
-    # star) which AQE submits concurrently — against a cold cache each
-    # would recompute the explode+MinHash key derivation before any
-    # partition registers. One eager pass = keys computed exactly once.
-    keyed.count()
 
     # One shuffle on blocking_key serves the size count AND the self-join.
     sizes = keyed.groupBy("family", "blocking_key").agg(F.count("*").alias("n_records"))
@@ -171,12 +175,6 @@ def candidate_pairs(
         cap = F.when(F.col("family") == fam, F.lit(min(fam_cap, config.max_block_size))).otherwise(cap)
     oversized = F.col("n_records") > cap
     starred = star_eligible & (F.col("n_records") > F.lit(config.identity_star_threshold))
-
-    block_stats = sizes.filter(oversized | starred).withColumn(
-        "action",
-        F.when(starred, F.lit("star")).otherwise(F.lit("subsalted")),
-    )
-
     hot = (~star_eligible) & (~oversized) & (F.col("n_records") > F.lit(config.salt_buckets * 8))
 
     # Sub-salt factor for oversized non-identity blocks: split a block of n
@@ -185,18 +183,38 @@ def candidate_pairs(
     # hot key can never blow up a stage. The reduced intra-block recall is
     # deterministic and REPORTED (action='subsalted'), never silent.
     subsalt_k = F.ceil(F.col("n_records") / cap).cast("long")
-    keyed_sized = keyed.join(
-        F.broadcast(
-            sizes.filter(oversized | starred | hot).select(
-                "blocking_key",
-                "family",
-                starred.alias("is_star"),
-                hot.alias("is_hot"),
-                F.when(oversized & ~starred, subsalt_k).alias("sub_k"),
-            )
-        ),
-        ["family", "blocking_key"],
-        "left",
+    guard = sizes.filter(oversized | starred | hot).select(
+        "family",
+        "blocking_key",
+        "n_records",
+        starred.alias("is_star"),
+        hot.alias("is_hot"),
+        F.when(oversized & ~starred, subsalt_k).alias("sub_k"),
+        # oversized/starred blocks are reported; hot-only ones are not
+        F.when(starred, F.lit("star")).when(oversized, F.lit("subsalted")).alias("action"),
+    )
+    # The guard key set is small (it is broadcast either way). Collecting it
+    # once is also the materialization barrier: the size aggregation scans
+    # all of keyed, filling its cache before the pair query below
+    # references keyed from up to ~8 leaf stages that AQE submits
+    # concurrently — against a cold cache each would recompute the
+    # explode+MinHash key derivation. Knowing the rows, only the guard
+    # branches that have any are planned. Above the limit the joins below
+    # read the cached guard set, which stays cached as long as keyed does.
+    rows, _ = collect_small(guard)
+    if rows is not None:
+        guard = local_relation(
+            records.sparkSession,
+            {c: [r[c] for r in rows] for c in guard.columns},
+            guard.schema,
+        )
+        has_star = any(r["is_star"] for r in rows)
+        has_hot = any(r["is_hot"] for r in rows)
+        has_sub = any(r["sub_k"] is not None for r in rows)
+    else:
+        has_star = has_hot = has_sub = True
+    block_stats = guard.filter(F.col("action").isNotNull()).select(
+        "family", "blocking_key", "n_records", "action"
     )
 
     # The ENTIRE pair join runs in 8-byte longs: didx is the rank of
@@ -207,66 +225,77 @@ def candidate_pairs(
     # per side instead of a 64-char id. Salting/sub-salting keys are
     # derived from record_id, so the pair set does not depend on how the
     # ids were interned.
+    keyed_sized = keyed.join(
+        F.broadcast(guard.select("family", "blocking_key", "is_star", "is_hot", "sub_k")),
+        ["family", "blocking_key"],
+        "left",
+    )
     quad = keyed_sized.filter(
         F.col("is_star").isNull() & F.col("sub_k").isNull()
     ).select("blocking_key", "didx")
-    star = keyed_sized.filter(F.col("is_star") == True).select("blocking_key", "didx")  # noqa: E712
-    # hot rows keep record_id alongside: the salt assignment hashes it
-    hot_rows = keyed_sized.filter(F.col("is_hot") == True).select(  # noqa: E712
-        "blocking_key", "record_id", "didx"
-    )
-    sub_rows = keyed_sized.filter(F.col("sub_k").isNotNull()).select(
-        F.concat(
-            F.col("blocking_key"),
-            F.lit("#"),
-            F.pmod(F.xxhash64("record_id"), F.col("sub_k")).cast("string"),
-        ).alias("blocking_key"),
-        "didx",
-    )
-    # sub-blocks are ~cap-sized quadratic blocks — reuse the plain pair join
-    quad = quad.unionByName(sub_rows)
+    if has_sub:
+        # sub-blocks are ~cap-sized quadratic blocks — reuse the plain pair join
+        quad = quad.unionByName(
+            keyed_sized.filter(F.col("sub_k").isNotNull()).select(
+                F.concat(
+                    F.col("blocking_key"),
+                    F.lit("#"),
+                    F.pmod(F.xxhash64("record_id"), F.col("sub_k")).cast("string"),
+                ).alias("blocking_key"),
+                "didx",
+            )
+        )
 
     l, r = quad.alias("l"), quad.alias("r")
-    quad_pairs = (
+    branches = [
         l.join(r, "blocking_key")
         .filter(F.col("l.didx") < F.col("r.didx"))
         .select(F.col("l.didx").alias("left_didx"), F.col("r.didx").alias("right_didx"))
-    )
+    ]
 
-    # Hot-key salting (SURVEY.md §4.1): keys below the cap but big enough to
-    # make one post-shuffle task a straggler get the classic replicate-probe
-    # treatment — left side hashed into S salt buckets, right side replicated
-    # to every bucket, join key widened to (blocking_key, salt). A hot key's
-    # n^2/2 pair generation then spreads over S tasks instead of one.
-    # (AQE skew-join stays on as backstop for everything else.)
-    S = config.salt_buckets
-    salted_l = hot_rows.select(
-        "blocking_key",
-        F.col("didx").alias("_l"),
-        F.pmod(F.xxhash64("record_id"), F.lit(S)).cast("int").alias("salt"),
-    )
-    salted_r = hot_rows.select(
-        "blocking_key",
-        F.col("didx").alias("_r"),
-        F.explode(F.sequence(F.lit(0).cast("int"), F.lit(S - 1).cast("int"))).alias("salt"),
-    )
-    hot_pairs = (
-        salted_l.join(salted_r, ["blocking_key", "salt"])
-        .filter(F.col("_l") < F.col("_r"))
-        .select(F.col("_l").alias("left_didx"), F.col("_r").alias("right_didx"))
-    )
-    quad_pairs = quad_pairs.unionByName(hot_pairs)
+    if has_hot:
+        # Hot-key salting (SURVEY.md §4.1): keys below the cap but big
+        # enough to make one post-shuffle task a straggler get the classic
+        # replicate-probe treatment — left side hashed into S salt buckets,
+        # right side replicated to every bucket, join key widened to
+        # (blocking_key, salt). A hot key's n^2/2 pair generation then
+        # spreads over S tasks instead of one. (AQE skew-join stays on as
+        # backstop for everything else.) Hot rows keep record_id alongside:
+        # the salt assignment hashes it.
+        S = config.salt_buckets
+        hot_rows = keyed_sized.filter(F.col("is_hot") == True).select(  # noqa: E712
+            "blocking_key", "record_id", "didx"
+        )
+        salted_l = hot_rows.select(
+            "blocking_key",
+            F.col("didx").alias("_l"),
+            F.pmod(F.xxhash64("record_id"), F.lit(S)).cast("int").alias("salt"),
+        )
+        salted_r = hot_rows.select(
+            "blocking_key",
+            F.col("didx").alias("_r"),
+            F.explode(F.sequence(F.lit(0).cast("int"), F.lit(S - 1).cast("int"))).alias("salt"),
+        )
+        branches.append(
+            salted_l.join(salted_r, ["blocking_key", "salt"])
+            .filter(F.col("_l") < F.col("_r"))
+            .select(F.col("_l").alias("left_didx"), F.col("_r").alias("right_didx"))
+        )
 
-    # Star expansion: hub = min(didx) per oversized identity block, which
-    # is the min record_id (didx is its rank).
-    hubs = star.groupBy("blocking_key").agg(F.min("didx").alias("hub"))
-    star_pairs = (
-        star.join(hubs, "blocking_key")
-        .filter(F.col("didx") != F.col("hub"))
-        .select(F.col("hub").alias("left_didx"), F.col("didx").alias("right_didx"))
-    )
+    if has_star:
+        # Star expansion: hub = min(didx) per oversized identity block,
+        # which is the min record_id (didx is its rank).
+        star = keyed_sized.filter(F.col("is_star") == True).select(  # noqa: E712
+            "blocking_key", "didx"
+        )
+        hubs = star.groupBy("blocking_key").agg(F.min("didx").alias("hub"))
+        branches.append(
+            star.join(hubs, "blocking_key")
+            .filter(F.col("didx") != F.col("hub"))
+            .select(F.col("hub").alias("left_didx"), F.col("didx").alias("right_didx"))
+        )
 
-    deduped = quad_pairs.unionByName(star_pairs).dropDuplicates(
+    deduped = functools.reduce(lambda a, b: a.unionByName(b), branches).dropDuplicates(
         ["left_didx", "right_didx"]
     )
     # ONE string-id re-attach after the dedup, from the slim (didx,

@@ -17,9 +17,10 @@ Catalyst can plan; converges in O(log n) rounds on real graphs.
   snapshot) restarts from the last complete iteration
   (tests/test_cluster_props.py::test_cc_durable_checkpoint_resume).
 * One finishing policy for both: once the edge set is at or below
-  ``config.cc_driver_finish_edges`` rows, the labeling finishes with one
-  collect + driver union-find. Graphs above it keep iterating (and, with
-  a checkpoint dir, keep their per-iteration snapshots).
+  ``config.DRIVER_FINISH_EDGES`` rows (``driver_finish.fits``, the gate
+  every driver-finished relation goes through), the labeling finishes
+  with one collect + driver union-find. Graphs above it keep iterating
+  (and, with a checkpoint dir, keep their per-iteration snapshots).
 * The plans/pipeline runs CC on the dense ``didx`` longs; ids of either
   type work, and ``clusters_with_singletons`` maps didx labels back to
   record ids.
@@ -35,6 +36,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from identity_matching_spark.config import MatchConfig
+from identity_matching_spark.operators.driver_finish import fits, local_relation
 
 
 def _canonical_edges(edges: DataFrame) -> DataFrame:
@@ -82,9 +84,9 @@ def _finish_in_driver(e: DataFrame) -> DataFrame:
     it is a few hundred thousand rows, each further distributed iteration
     is ~fixed scheduler/AQE latency over a few MB — driver-phase overhead
     that a real cluster pays too and that does not scale with executors.
-    Gated by ``config.cc_driver_finish_edges`` on both the ephemeral and
-    the durable path; a graph above the gate keeps the distributed loop
-    and its iteration snapshots.
+    Gated by ``driver_finish.fits(n, edges=True)`` on both the ephemeral
+    and the durable path; a graph above the gate keeps the distributed
+    loop and its iteration snapshots.
 
     Union-find with min-id-as-root + path compression: the component
     representative is the MIN record_id in string order — identical ids
@@ -92,7 +94,6 @@ def _finish_in_driver(e: DataFrame) -> DataFrame:
     tests/test_cluster_props.py::test_driver_finish_equivalence.
     """
     import numpy as np
-    import pandas as pd
 
     spark = e.sparkSession
     is_long = e.schema["src"].dataType.typeName() in ("long", "integer")
@@ -127,13 +128,12 @@ def _finish_in_driver(e: DataFrame) -> DataFrame:
         else:
             parent[a] = b
     roots = np.fromiter((find(i) for i in range(len(ids))), dtype=np.int64)
-    out = pd.DataFrame({"record_id": ids, "cluster_id": ids[roots]})
     schema = (
         "record_id long, cluster_id long"
         if is_long
         else "record_id string, cluster_id string"
     )
-    return spark.createDataFrame(out, schema=schema)
+    return local_relation(spark, {"record_id": ids, "cluster_id": ids[roots]}, schema)
 
 
 def connected_components(
@@ -222,7 +222,7 @@ def connected_components(
 
         with open(manifest, "w") as fh:
             _json.dump({"n": sig[0], "h": str(sig[1])}, fh)
-    if sig[0] <= config.cc_driver_finish_edges:
+    if fits(sig[0], edges=True):
         return _finish_in_driver(e)
     for it in range(start_it, start_it + config.cc_max_iterations):
         e2 = _materialize(_small_star(_large_star(e)), it)
@@ -233,7 +233,7 @@ def connected_components(
         if sig2 == sig:
             break
         sig = sig2
-        if sig[0] <= config.cc_driver_finish_edges:
+        if fits(sig[0], edges=True):
             # small enough: one collect replaces the remaining rounds
             return _finish_in_driver(e)
     # After convergence every edge points node -> component min.

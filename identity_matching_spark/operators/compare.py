@@ -22,8 +22,11 @@ Deliberate divergences from the reference, documented per SURVEY.md §2.11:
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from identity_matching_spark.operators.driver_finish import collect_small, local_relation
 
 # Columns each side of a pair needs for comparison. Every scalar is an
 # 8-byte long: identity attributes ride as h64 twins (see
@@ -69,8 +72,9 @@ def _eq(l: Column, r: Column) -> Column:
 RECORDS_BROADCAST_LIMIT = 1_000_000
 
 
-def _records_side(records_relation: DataFrame, n_records: int, limit: int):
-    """Broadcast the records side when it fits, else shuffle-hash.
+def _records_side(records_relation: DataFrame, n_records: int | None, limit: int):
+    """Broadcast the records side when it fits, else shuffle-hash; an
+    unknown size (None) shuffle-hashes, never a hidden count job.
 
     The O(1) count-based choice is deterministic (same pattern as the JW
     table): AQE would only downgrade the exchange after the pair stream's
@@ -80,7 +84,7 @@ def _records_side(records_relation: DataFrame, n_records: int, limit: int):
     spill of ~330 MB/task); with the records side as the hashed build
     relation the pair stream only shuffles, never sorts.
     """
-    if n_records <= limit:
+    if n_records is not None and n_records <= limit:
         return F.broadcast(records_relation)
     return records_relation.hint("shuffle_hash")
 
@@ -102,9 +106,10 @@ def attach_sides(
 
     Spark's LongHashedRelation turns the dense long key space into a
     direct-address array (LongToUnsafeRowMap dense mode): each probe is one
-    indexed load instead of a hash-bucket walk. Small records relations
-    broadcast (zero pair-stream shuffles); large ones shuffle-hash (two
-    slim exchanges keyed on 8-byte longs — unavoidable for arbitrary pair
+    indexed load instead of a hash-bucket walk. Records relations of a
+    known ``n_records`` up to ``broadcast_limit`` broadcast (zero
+    pair-stream shuffles); large or uncounted ones shuffle-hash (two slim
+    exchanges keyed on 8-byte longs — unavoidable for arbitrary pair
     lists). Either way ONE relation is probed from both sides: the two join
     children are the same plan subtree (only the SubqueryAlias differs,
     which canonicalization strips), so the second broadcast is planned as a
@@ -116,8 +121,6 @@ def attach_sides(
     (plan-asserted in test_fuzzy.py)."""
     cols = list(cols or ATTR_COLS)
     side_cols = [c for c in cols if c != "record_id"]
-    if n_records is None:
-        n_records = records.count()
     rel = _records_side(
         records.select("didx", *side_cols), n_records, broadcast_limit
     )
@@ -256,47 +259,68 @@ def _phonetic_twins(df: DataFrame) -> DataFrame:
     )
 
 
-def enrich_phonetic(records: DataFrame, distinct_broadcast: bool = True) -> DataFrame:
+def enrich_phonetic(records: DataFrame) -> DataFrame:
     """Phonetic encodings per record: COLOGNE on the given-name analog,
     SOUNDEX/METAPHONE on the family-name analog (mdm-rules.json:25-42).
 
-    Soundex is Spark's builtin (pure JVM). The python encoders (cologne,
-    metaphone) run once per DISTINCT normalized value and broadcast-join
-    back — the record stream never crosses the Arrow boundary, the same
-    shape as ``jw_stem_table``. Name-analog vocabularies are Zipfian and
-    tiny relative to the corpus; a deployment whose vocabulary outgrows
-    the broadcast budget passes ``distinct_broadcast=False`` to fall back
-    to per-record batched pandas UDFs (still linear, never per pair).
+    Soundex is Spark's builtin (pure JVM). Cologne and metaphone run once
+    per DISTINCT normalized value and broadcast-join back, so the record
+    stream never crosses into Python. Name-analog vocabularies are
+    Zipfian and tiny relative to the corpus: up to
+    ``config.DRIVER_FINISH_ROWS`` distinct values (both columns together)
+    are collected once and encoded on the driver with
+    ``phonetic.cologne_encode``/``metaphone_encode``; a larger vocabulary
+    is encoded by the batched pandas UDFs over the cached distinct values,
+    handed back as ``_phonetic_vocab_cache`` on the result (None on the
+    driver path) for the caller to unpersist.
     """
     from identity_matching_spark.functions.normalize import hapi_norm
-    from identity_matching_spark.functions.phonetic import cologne_udf, metaphone_udf
-
-    if not distinct_broadcast:
-        return _phonetic_twins(records.select(
-            "*",
-            cologne_udf(hapi_norm(F.col("dir1"))).alias("cologne_dir1"),
-            F.soundex(hapi_norm(F.col("stem"))).alias("soundex_stem"),
-            metaphone_udf(hapi_norm(F.col("stem"))).alias("metaphone_stem"),
-        ))
+    from identity_matching_spark.functions.phonetic import (
+        cologne_encode,
+        cologne_udf,
+        metaphone_encode,
+        metaphone_udf,
+    )
     base = records.select(
         "*",
         hapi_norm(F.col("dir1")).alias("_nd1"),
         hapi_norm(F.col("stem")).alias("_nst"),
     )
-    cologne_tab = (
-        base.select(F.col("_nd1")).where(F.col("_nd1").isNotNull()).distinct()
-        .select("_nd1", cologne_udf(F.col("_nd1")).alias("cologne_dir1"))
+    d1 = base.select(F.col("_nd1")).where(F.col("_nd1").isNotNull()).distinct()
+    st = base.select(F.col("_nst")).where(F.col("_nst").isNotNull()).distinct()
+    vocab_df = d1.select(F.lit(True).alias("_given"), F.col("_nd1").alias("_v")).unionByName(
+        st.select(F.lit(False).alias("_given"), F.col("_nst").alias("_v"))
     )
-    metaphone_tab = (
-        base.select(F.col("_nst")).where(F.col("_nst").isNotNull()).distinct()
-        .select("_nst", metaphone_udf(F.col("_nst")).alias("metaphone_stem"))
-    )
-    return _phonetic_twins(
+    vocab, vocab_cache = collect_small(vocab_df)
+    if vocab is not None:
+        spark = records.sparkSession
+        given = [r["_v"] for r in vocab if r["_given"]]
+        family = [r["_v"] for r in vocab if not r["_given"]]
+        cologne_tab = local_relation(
+            spark,
+            {"_nd1": given, "cologne_dir1": [cologne_encode(v) for v in given]},
+            "_nd1 string, cologne_dir1 string",
+        )
+        metaphone_tab = local_relation(
+            spark,
+            {"_nst": family, "metaphone_stem": [metaphone_encode(v) for v in family]},
+            "_nst string, metaphone_stem string",
+        )
+    else:
+        cologne_tab = vocab_df.where(F.col("_given")).select(
+            F.col("_v").alias("_nd1"), cologne_udf(F.col("_v")).alias("cologne_dir1")
+        )
+        metaphone_tab = vocab_df.where(~F.col("_given")).select(
+            F.col("_v").alias("_nst"), metaphone_udf(F.col("_v")).alias("metaphone_stem")
+        )
+    out = _phonetic_twins(
         base.join(F.broadcast(cologne_tab), "_nd1", "left")
         .join(F.broadcast(metaphone_tab), "_nst", "left")
         .withColumn("soundex_stem", F.soundex(F.col("_nst")))
         .drop("_nd1", "_nst")
     )
+    out._phonetic_vocab_cache = vocab_cache
+    return out
 
 
 FUZZY_FLAG_NAMES = [
@@ -315,32 +339,38 @@ def jw_stem_table(
     not per candidate pair.
 
     Blocked candidate pairs repeat the same (l_stem, r_stem) combination
-    millions of times (hot stems), so evaluating the pandas UDF per pair
-    makes Arrow serde + Python workers the non-scaling fraction of the
-    scoring kernel. Instead: project a slim (didx, stem) map, derive the
-    distinct unequal stem pairs seen by the candidate list (map-side
-    combine keeps that shuffle tiny), run the UDF once per distinct pair,
-    and join the values back. The 100 TB pair stream never crosses the
-    Arrow boundary; equal-stem pairs (the majority under stem-family
-    blocking) are JW=1.0 (and lev-ratio 1.0) by definition and never even
-    reach this table. Levenshtein rides here too: the builtin is JVM-side
-    but still O(|s|²) DP per evaluation — evaluating it once per distinct
-    unequal pair instead of once per candidate pair removes ~90M DP runs
-    at sf0.1.
+    millions of times (hot stems), so evaluating Jaro-Winkler per pair
+    would make Python the non-scaling fraction of the scoring kernel.
+    Instead: project a slim (didx, stem) map, derive the distinct unequal
+    stem pairs seen by the candidate list (map-side combine keeps that
+    shuffle tiny), score each distinct pair once, and join the values
+    back. The pair stream never crosses into Python; equal-stem pairs
+    (the majority under stem-family blocking) are JW=1.0 (and lev-ratio
+    1.0) by definition and never even reach this table. Levenshtein rides
+    here too: the builtin is JVM-side but still O(|s|²) DP per evaluation
+    — evaluating it once per distinct unequal pair instead of once per
+    candidate pair removes ~90M DP runs at sf0.1.
+
+    Up to ``config.DRIVER_FINISH_ROWS`` distinct pairs are collected once
+    and scored on the driver with ``similarity.jaro_winkler`` into a
+    local relation. A larger table is scored by the batched pandas UDF
+    over the cached distinct pairs, then persisted and counted once. The
+    returned frame carries its row count (``n_rows``) either way, and the
+    persisted table (``jw_stem_cache``, None on the driver path) for the
+    caller to unpersist.
 
     Rows are CANONICALIZED to (least(stem), greatest(stem)): Jaro-Winkler
     and Levenshtein-ratio are both symmetric, so one orientation serves
-    both — halving the distinct set, the partial-agg hash maps, the UDF
-    calls, and the broadcast that ships the values back. Probe sides
-    canonicalize the same way.
+    both — halving the distinct set, the partial-agg hash maps, the
+    Jaro-Winkler calls, and the broadcast that ships the values back.
+    Probe sides canonicalize the same way. ``n_records`` None (unknown)
+    joins the stem maps shuffle-hash.
     """
     from identity_matching_spark.functions.similarity import (
+        jaro_winkler,
         jaro_winkler_udf,
         levenshtein_ratio,
     )
-
-    if n_records is None:
-        n_records = records.count()
     # stem maps keyed on didx: probes hit the dense long hash relation, no
     # id-string hashing on this scan
     l, r = (
@@ -350,12 +380,9 @@ def jw_stem_table(
         )
         for side, stem in (("left", "_sl"), ("right", "_sr"))
     )
-    joined = (
+    distinct_pairs = (
         pairs.select("left_didx", "right_didx")
         .join(l, "left_didx").join(r, "right_didx")
-    )
-    return (
-        joined
         .where(
             F.col("_sl").isNotNull()
             & F.col("_sr").isNotNull()
@@ -366,7 +393,22 @@ def jw_stem_table(
             F.greatest("_sl", "_sr").alias("r_stem"),
         )
         .distinct()
-        .withColumn("jw_stem_val", jaro_winkler_udf(F.col("l_stem"), F.col("r_stem")))
+    )
+    rows, distinct_cache = collect_small(distinct_pairs)
+    if rows is not None:
+        ls, rs = [r["l_stem"] for r in rows], [r["r_stem"] for r in rows]
+        scored = local_relation(
+            records.sparkSession,
+            {"l_stem": ls, "r_stem": rs,
+             "jw_stem_val": [jaro_winkler(a, b) for a, b in zip(ls, rs)]},
+            "l_stem string, r_stem string, jw_stem_val double",
+        )
+    else:
+        scored = distinct_pairs.withColumn(
+            "jw_stem_val", jaro_winkler_udf(F.col("l_stem"), F.col("r_stem"))
+        )
+    out = (
+        scored
         .withColumn("lev_stem_val", levenshtein_ratio(F.col("l_stem"), F.col("r_stem")))
         # join keys for the kernel's probe side, which carries only the
         # stems' xxhash64 twins (normalize.stem_h64): the canonical
@@ -379,6 +421,14 @@ def jw_stem_table(
             "jh_hi", F.greatest(F.xxhash64("l_stem"), F.xxhash64("r_stem"))
         )
     )
+    if rows is not None:
+        out.n_rows, out.jw_stem_cache = len(rows), None
+    else:
+        out = out.persist(StorageLevel.MEMORY_AND_DISK)
+        out.n_rows, out.jw_stem_cache = out.count(), out
+        if distinct_cache is not None:
+            distinct_cache.unpersist()
+    return out
 
 
 def compare_pairs_fuzzy(
@@ -386,6 +436,7 @@ def compare_pairs_fuzzy(
     records: DataFrame,
     config,
     jw_pairs: DataFrame | None = None,
+    n_records: int | None = None,
 ) -> DataFrame:
     """Exact flag vector + fuzzy comparator flags.
 
@@ -400,9 +451,11 @@ def compare_pairs_fuzzy(
     any relation with the same pair SET (e.g. the unreplicated scan when
     ``pairs`` is a replicated stream, or a pre-deduped union) yields an
     identical table while scanning fewer rows. Defaults to ``pairs``.
-    """
-    from pyspark import StorageLevel
 
+    ``n_records``: the records' row count when the caller holds it (the
+    pipeline's records stage). None means unknown: every records-side
+    join then shuffle-hashes instead of running a count job.
+    """
     # Enrich only if the caller didn't already (pipelines enrich once at
     # normalize time — keeps this join side a plain relation, so Catalyst
     # can broadcast it when small instead of shuffling the huge pair list).
@@ -416,16 +469,20 @@ def compare_pairs_fuzzy(
         enriched = enrich_phonetic(records)
     cols = ATTR_COLS + PHONETIC_H64_COLS
     limit = config.records_broadcast_limit
-    # Two O(1) counts drive every join choice below (same pattern as the
+    # Two known sizes drive every join choice below (same pattern as the
     # CC convergence check) — AQE would only downgrade an exchange after
-    # the pair stream's map stage already ran.
-    n_records = enriched.count()
+    # the pair stream's map stage already ran. The JW table carries its
+    # row count, driver-finished or persisted and counted.
     jwtab = jw_stem_table(
         jw_pairs if jw_pairs is not None else pairs, enriched, n_records, limit
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    n_jw = jwtab.count()
+    )
+    n_jw = jwtab.n_rows
 
-    if n_records <= limit and n_jw <= config.jw_distinct_broadcast_limit:
+    if (
+        n_records is not None
+        and n_records <= limit
+        and n_jw <= config.jw_distinct_broadcast_limit
+    ):
         # Broadcast regime: the whole kernel is ONE codegen pass over the
         # pair stream — scan -> 3 broadcast probes -> flags -> partial
         # agg, zero pair-stream exchanges. Attach attrs FIRST (the stem
@@ -520,9 +577,10 @@ def compare_pairs_fuzzy(
         F.round(F.coalesce(jw, F.lit(0.0)), 4).alias("jw_family_sim"),
         F.round(F.coalesce(lev, F.lit(0.0)), 4).alias("lev_family_sim"),
     )
-    # Hand the persisted JW table back on the result so long-lived sessions
+    # Hand a persisted JW table back on the result so long-lived sessions
     # (bench sweeps, repeated calls) can unpersist it after materializing
     # the scored output — otherwise the cached blocks accumulate until
-    # clearCache. Callers: PipelineResult.cleanup / bench kernel.
-    out.jw_stem_cache = jwtab
+    # clearCache. None when the table was finished on the driver (nothing
+    # cached). Callers: PipelineResult.cleanup / bench kernel.
+    out.jw_stem_cache = jwtab.jw_stem_cache
     return out

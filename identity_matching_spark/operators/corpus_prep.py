@@ -417,8 +417,12 @@ def global_shuffle(
     pass 2 shuffles by bucket, sorts within partitions, and adds
     offset[bucket] + within-bucket index. Hash keys are uniform, so the
     buckets are balanced without sampling. Identical output to the
-    single-window plan at any parallelism.
+    single-window plan at any parallelism. The keyed slim relation is
+    persisted before the count pass (handed back as ``_shuffle_keyed_cache``),
+    so both passes see the same rows even over a non-deterministic input.
     """
+    from pyspark import StorageLevel
+
     spark = docs.sparkSession
     if n_buckets is None:
         n_buckets = max(2 * spark.sparkContext.defaultParallelism, 16)
@@ -429,7 +433,9 @@ def global_shuffle(
         hash64_sha(F.concat_ws(":", F.lit(str(seed)), F.col(id_col).cast("string"))).alias(
             "shuffle_key"
         ),
-    ).withColumn("_bkt", (F.col("shuffle_key") / F.lit(stride)).cast("long"))
+    ).withColumn("_bkt", (F.col("shuffle_key") / F.lit(stride)).cast("long")).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
     counts = keyed.groupBy("_bkt").count().collect()
     offsets = {}
     acc = 0
@@ -460,4 +466,6 @@ def global_shuffle(
             out["position"] = pos
             yield out
 
-    return parts.mapInPandas(_add_pos, out_schema)
+    out = parts.mapInPandas(_add_pos, out_schema)
+    out._shuffle_keyed_cache = keyed
+    return out

@@ -43,6 +43,7 @@ from pyspark.sql import functions as F
 
 from identity_matching_spark.functions.hashing import hash64_sha, sha256_hex
 from identity_matching_spark.functions.normalize import norm_ws
+from identity_matching_spark.operators.driver_finish import collect_small, local_relation
 
 SEP = ""  # unit separator for composite keys (chr(31) in SQL)
 
@@ -105,19 +106,27 @@ def with_dense_ids(
     Downstream joins keyed on didx hit Spark's LongHashedRelation dense
     mode (direct-address array, one indexed load per probe) instead of a
     sparse hash walk — the single biggest lever on the scoring kernel's
-    probe memory traffic. Deterministic: same records -> same didx, and
-    the SAME didx for every ``prefix_nibbles`` width (the bucket scheme
-    only re-partitions the rank computation, never reorders it —
-    pytested in test_attach_dense.py).
+    probe memory traffic. Deterministic: same records -> same didx, on
+    either path below and for every ``prefix_nibbles`` width (pytested in
+    test_attach_dense.py).
 
-    Scale shape (no global window — a single-partition sort of 10^12 ids
-    is a non-starter): record_id is fixed-width lowercase sha-hex, so its
-    lexicographic order equals the numeric order of any hex prefix. Two
-    linear passes over the SLIM id column, which is PERSISTED first so
-    both passes observe identical rows (the upstream normalize chain is
-    sha-heavy and must not re-execute per pass, and a non-deterministic
-    source must not let the offset pass disagree with the rank pass —
-    ADVICE r4):
+    Driver finish (at most ``config.DRIVER_FINISH_ROWS`` ids): one collect
+    of the ids, sorted and enumerated on the driver, joined back as a
+    broadcast local relation. Python's str order is code-point order,
+    which is the byte order of UTF-8, i.e. Spark's string order, so the
+    ranks equal the distributed path's. The slim id column is cached only
+    for that collect and dropped right after it, so nothing stays pinned
+    and the records plan stays one broadcast join deep.
+
+    Scale shape above the limit (no global window — a single-partition
+    sort of 10^12 ids is a non-starter): record_id is fixed-width
+    lowercase sha-hex, so its lexicographic order equals the numeric
+    order of any hex prefix. Two linear passes over the SLIM id column,
+    which the limit collect PERSISTED, so both passes observe identical
+    rows and the collect's work is not repeated (the
+    upstream normalize chain is sha-heavy and must not re-execute per
+    pass, and a non-deterministic source must not let the offset pass
+    disagree with the rank pass — ADVICE r4):
 
     1. count rows per ``16^prefix_nibbles`` order-preserving prefix
        buckets (one map-side-combined groupBy -> O(buckets) rows to the
@@ -141,12 +150,21 @@ def with_dense_ids(
     """
     import math
 
-    from pyspark import StorageLevel
     from pyspark.sql import Window
 
     if "didx" in records.columns:  # already interned — idempotent
         return records
-    slim = records.select("record_id").persist(StorageLevel.MEMORY_AND_DISK)
+    spark = records.sparkSession
+    slim = records.select("record_id")
+    ids, slim_cache = collect_small(slim)
+    if ids is not None:
+        ordered = sorted(r[0] for r in ids)
+        idmap = local_relation(
+            spark,
+            {"record_id": ordered, "didx": list(range(len(ordered)))},
+            "record_id string, didx long",
+        )
+        return records.join(F.broadcast(idmap), "record_id")
 
     def _bucket(nib: int):
         return F.conv(F.substring("record_id", 1, nib), 16, 10).cast("long")
@@ -163,9 +181,7 @@ def with_dense_ids(
     for row in sorted(counts, key=lambda r: r["_bkt"]):
         offsets.append((int(row["_bkt"]), acc))
         acc += int(row["count"])
-    off_df = records.sparkSession.createDataFrame(
-        offsets, "_bkt long, _off long"
-    )
+    off_df = spark.createDataFrame(offsets, "_bkt long, _off long")
     w = Window.partitionBy("_bkt").orderBy("record_id")
     idmap = (
         slim.select("record_id", _bucket(nib).alias("_bkt"))
@@ -180,7 +196,7 @@ def with_dense_ids(
     else:
         idmap = idmap.hint("shuffle_hash")
     out = records.join(idmap, "record_id")
-    out._dense_slim_cache = slim
+    out._dense_slim_cache = slim_cache
     return out
 
 

@@ -19,6 +19,13 @@ modes differ only in how a stage is materialized (``_Stages.run``):
   ``resume``, stages whose snapshot carries ``_SUCCESS`` are read back
   instead of rebuilt — up to the first stage that has to be rebuilt, after
   which every later stage is rebuilt too (north_rule resumability).
+
+The small relations along the way — the dense-id map, the phonetic
+dictionaries, blocking's guard keys and the distinct-stem JW table — are
+finished on the driver below ``config.DRIVER_FINISH_ROWS``
+(``operators/driver_finish.py``): one collect each, returned as broadcast
+local relations, so the default path starts no Python worker and pins no
+helper cache.
 """
 
 from __future__ import annotations
@@ -59,10 +66,13 @@ class PipelineResult:
     pinned: list = field(default_factory=list, repr=False)  # caches this run holds
 
     def cleanup(self) -> None:
-        """Unpersist every cache this run pinned (records/pairs/scored, the
-        dense-id slim map and the fuzzy path's distinct-stem JW table) —
-        call after the outputs have been materialized; long-lived sessions
-        otherwise accumulate cached blocks across runs."""
+        """Unpersist every cache this run pinned: the in-memory stage
+        barriers (records, scored pairs, and pairs when fuzzy) and, only
+        above ``config.DRIVER_FINISH_ROWS``, the dense-id slim map, the
+        phonetic vocabulary and the distinct-stem JW table (their
+        driver-finished forms are local relations and pin nothing). Call after the outputs have been
+        materialized; long-lived sessions otherwise accumulate cached
+        blocks across runs."""
         for df in self.pinned:
             df.unpersist()
         self.pinned.clear()
@@ -158,20 +168,22 @@ def run_pipeline(
         from identity_matching_spark.operators.normalize import with_dense_ids
 
         records = validation_gate(normalize_files(files), config)
-        # Dense-id interning (two slim passes + broadcast join-back): every
-        # later join keys on direct-address long maps instead of 64-char
-        # sha strings.
+        # Dense-id interning (a driver-sorted id map, or two slim passes
+        # above the driver-finish limit; broadcast join-back either way):
+        # every later join keys on direct-address long maps instead of
+        # 64-char sha strings.
         records = with_dense_ids(records, prefix_nibbles=config.dense_id_nibbles)
         st.pin(getattr(records, "_dense_slim_cache", None))
         if config.enable_fuzzy:
             from identity_matching_spark.operators.compare import enrich_phonetic
 
             records = enrich_phonetic(records)
+            st.pin(records._phonetic_vocab_cache)
         return records
 
     # records feeds blocking, both compare sides and the cluster join-back:
     # materialize it so the sha-heavy normalize projection and the phonetic
-    # pandas UDFs run once, linearly, before any pair fan-out.
+    # dictionary joins run once, linearly, before any pair fan-out.
     records = st.run("records", build_records)
     stats: list[DataFrame] = []
 
@@ -190,7 +202,9 @@ def run_pipeline(
         if config.enable_fuzzy:
             from identity_matching_spark.operators.compare import compare_pairs_fuzzy
 
-            flagged = compare_pairs_fuzzy(pairs, records, config)
+            flagged = compare_pairs_fuzzy(
+                pairs, records, config, n_records=st.rows["records"]
+            )
             st.pin(flagged.jw_stem_cache)
         else:
             flagged = compare_pairs(
@@ -220,7 +234,7 @@ def run_pipeline(
         # CC over dense longs: every star iteration's groupBy/join and the
         # driver-finish collect move 16 B/edge instead of two 64-char ids.
         # Durable runs snapshot CC iterations under the checkpoint dir, so
-        # a crash while a graph above cc_driver_finish_edges is still
+        # a crash while a graph above DRIVER_FINISH_EDGES edges is still
         # iterating resumes from the last iteration.
         assignments = connected_components(
             edges.select(

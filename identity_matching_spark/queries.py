@@ -252,6 +252,8 @@ def q_scored_pairs_fuzzy(spark, sf_dir):
     from identity_matching_spark.operators.grade import mdm_phonetic_verdict_expr
 
     records, pairs = _pairs(spark, sf_dir)
+    # no records count at hand: the attaches shuffle-hash instead of paying
+    # a count job to size a broadcast
     flagged = compare_pairs_fuzzy(pairs, enrich_phonetic(records), MatchConfig())
     return flagged.select(
         "left_id",

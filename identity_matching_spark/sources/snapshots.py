@@ -17,6 +17,13 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 
+#: The lineage log's row shape (``log_lineage`` as the pipeline calls it),
+#: fields in the name order JSON schema inference would give them.
+LINEAGE_SCHEMA = (
+    "n_partitions long, partitions array<struct<bytes: long, file: string, rows: long>>, "
+    "rows_out long, stage string, ts double, wall_sec double"
+)
+
 
 class SnapshotStore:
     """``table_format="parquet"`` (default) stores stages as parquet dirs
@@ -69,28 +76,31 @@ class SnapshotStore:
 
     def partition_metrics(self, name: str) -> list[dict]:
         """Per-partition metrics for a written stage (north_rule: resumable
-        with per-partition lineage + metrics): one entry per parquet
-        part-file with its row count (footer-driven scan grouped by
-        ``input_file_name``) and on-disk bytes. O(n_partitions) driver
-        rows — never row data."""
-        from pyspark.sql import functions as F
+        with per-partition lineage + metrics): one entry per non-empty
+        part-file with its row count and on-disk bytes. O(n_files) driver
+        rows — never row data. Parquet mode reads each row count from the
+        file's footer with pyarrow, so no Spark job runs; Iceberg mode
+        groups a scan by ``input_file_name``."""
+        if self.table_format == "iceberg":
+            from pyspark.sql import functions as F
 
-        per = (
-            self.read(name)
-            .groupBy(F.input_file_name().alias("file"))
-            .count()
-            .collect()
-        )
-        out = []
-        for r in per:
-            path = r["file"].replace("file://", "").split("?")[0]
-            out.append(
-                {
-                    "file": os.path.basename(path),
-                    "rows": r["count"],
-                    "bytes": os.path.getsize(path) if os.path.exists(path) else None,
-                }
-            )
+            per = self.read(name).groupBy(F.input_file_name().alias("f")).count().collect()
+            files = [(r["f"].replace("file://", "").split("?")[0], r["count"]) for r in per]
+        else:
+            import pyarrow.parquet as pq
+
+            root = self._path(name)
+            paths = [os.path.join(root, f) for f in os.listdir(root) if not f.startswith((".", "_"))]
+            files = [(p, pq.ParquetFile(p).metadata.num_rows) for p in paths]
+        out = [
+            {
+                "file": os.path.basename(path),
+                "rows": rows,
+                "bytes": os.path.getsize(path) if os.path.exists(path) else None,
+            }
+            for path, rows in files
+            if rows
+        ]
         return sorted(out, key=lambda d: d["file"])
 
     # --- Iceberg snapshot surface (executes only with the runtime jar) ---
@@ -172,6 +182,8 @@ class SnapshotStore:
         return rows
 
     def lineage(self) -> DataFrame | None:
+        """The lineage log as a DataFrame, read with its fixed schema (no
+        schema-inference job)."""
         if not os.path.exists(self._lineage_path):
             return None
-        return self.spark.read.json(self._lineage_path)
+        return self.spark.read.schema(LINEAGE_SCHEMA).json(self._lineage_path)

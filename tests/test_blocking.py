@@ -24,6 +24,14 @@ def tiny_cfg():
     )
 
 
+def _guard_branches(res) -> set[str]:
+    """Which guard branches the pair plan contains: the hot-key salt, the
+    sub-salt split and the identity-star hub."""
+    plan = res.pairs._jdf.queryExecution().optimizedPlan().toString()
+    marks = {"salt": " AS salt#", "subsalt": "pmod(", "star": " AS hub#"}
+    return {name for name, mark in marks.items() if mark in plan}
+
+
 def test_small_blocks_full_quadratic(spark, tiny_cfg):
     rows = [(f"r{i}", "a/b/same.py", f"{i:040x}", "python", f"content {i}") for i in range(4)]
     recs = _records(spark, rows)
@@ -31,6 +39,8 @@ def test_small_blocks_full_quadratic(spark, tiny_cfg):
     # 4 records share the name_prefix block -> C(4,2)=6 pairs
     assert res.pairs.count() == 6
     assert res.block_stats.count() == 0
+    # no guarded key: no salt, sub-salt or star branch is planned
+    assert _guard_branches(res) == set()
 
 
 def test_identity_star_shortcut(spark, tiny_cfg):
@@ -43,6 +53,7 @@ def test_identity_star_shortcut(spark, tiny_cfg):
     assert res.pairs.count() == 5
     stats = res.block_stats.collect()
     assert len(stats) == 1 and stats[0]["action"] == "star"
+    assert _guard_branches(res) == {"star"}
     # transitive closure still connects all 6 (verified via shared hub)
     hubs = {r["left_id"] for r in res.pairs.collect()}
     assert len(hubs) == 1

@@ -63,6 +63,19 @@ def test_global_shuffle_equals_single_window_rank(spark):
     assert positions == list(range(len(got)))  # dense 0..n-1
 
 
+def test_global_shuffle_positions_dense_over_nondeterministic_input(spark):
+    """The count pass and the position pass must see the same rows even when
+    the input differs on every evaluation. ``F.rand()`` would not do: its
+    seed is fixed when the column is built, so every pass draws the same
+    values; an unseeded Python coin is drawn afresh per evaluation."""
+    import random
+
+    coin = F.udf(lambda: random.random(), "double").asNondeterministic()
+    docs = load_table(spark, SF, "documents").filter(coin() < 0.5)
+    got = global_shuffle(docs, n_buckets=7).collect()
+    assert sorted(r["position"] for r in got) == list(range(len(got)))
+
+
 def test_decontaminate_broadcasts_eval_side(spark):
     docs = load_table(spark, SF, "documents")
     df = decontaminate(docs)

@@ -112,7 +112,7 @@ def test_kernel_plan_is_shuffle_free_in_broadcast_regime(spark):
     recs = _recs(spark, rows)
     ids = sorted(r["record_id"] for r in recs.select("record_id").collect())
     pairs = _pairs(spark, recs, [tuple(ids)])
-    scored = grade_pairs(compare_pairs_fuzzy(pairs, recs, CFG))
+    scored = grade_pairs(compare_pairs_fuzzy(pairs, recs, CFG, n_records=2))
     plan = scored._jdf.queryExecution().executedPlan().toString()
     assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan
     assert plan.count("BroadcastHashJoin") >= 4  # stems x2, jw table, attrs x2
@@ -134,19 +134,23 @@ def test_shuffle_hash_regime_equals_broadcast_regime(spark):
     shuffled = CFG.with_(records_broadcast_limit=0, jw_distinct_broadcast_limit=0)
     rows = lambda df: sorted(tuple(r) for r in df.collect())  # noqa: E731
 
-    exact_b = compare_pairs(pairs, recs)
-    exact_s = compare_pairs(pairs, recs, broadcast_limit=0)
+    exact_b = compare_pairs(pairs, recs, n_records=5)
+    exact_s = compare_pairs(pairs, recs, n_records=5, broadcast_limit=0)
     plan = exact_s._jdf.queryExecution().executedPlan().toString()
     assert plan.count("ShuffledHashJoin") >= 2  # both attach sides
     assert exact_s.columns == exact_b.columns
     assert rows(exact_s) == rows(exact_b)
 
-    fuzzy_b = compare_pairs_fuzzy(pairs, recs, CFG)
-    fuzzy_s = compare_pairs_fuzzy(pairs, recs, shuffled)
+    fuzzy_b = compare_pairs_fuzzy(pairs, recs, CFG, n_records=5)
+    fuzzy_s = compare_pairs_fuzzy(pairs, recs, shuffled, n_records=5)
     plan = fuzzy_s._jdf.queryExecution().executedPlan().toString()
     assert plan.count("ShuffledHashJoin") >= 5  # stems x2, jw table, attrs x2
     assert fuzzy_s.columns == fuzzy_b.columns
     assert rows(fuzzy_s) == rows(fuzzy_b)
     assert len(rows(fuzzy_b)) == 10
-    for df in (fuzzy_b, fuzzy_s):
-        df.jw_stem_cache.unpersist()
+    # both JW tables were finished on the driver: nothing cached to release
+    assert fuzzy_b.jw_stem_cache is None and fuzzy_s.jw_stem_cache is None
+    # an unknown records size (None) takes the shuffle-hash regime, no count
+    fuzzy_u = compare_pairs_fuzzy(pairs, recs, CFG)
+    assert "ShuffledHashJoin" in fuzzy_u._jdf.queryExecution().executedPlan().toString()
+    assert rows(fuzzy_u) == rows(fuzzy_b)
