@@ -9,17 +9,18 @@ for the headline operators over $SPARK_GRAFT_SF_DIR.
 Prints ONE JSON line:
   {"metric": "e2e_pipeline_sec", "value": <sec>, "unit": "sec",
    "queries": {...}, "sf": <sf>, "pairs_scored": N, "pairs_per_sec": N,
-   "cpus": N, "corpus_rows": N}
+   "cpus": N, "corpus_rows": N, "cal_units_per_sec": N, ...}
 
-Scaling-efficiency evidence (north_rule N vs 4N): run
-  SPARK_GRAFT_CPUS=8 python bench.py   and   SPARK_GRAFT_CPUS=32 python bench.py
-on the same input; see tools/bench_scaling.py which automates both and
-writes BENCH/BASELINE.md.
+    SPARK_GRAFT_SF_DIR=<dir>/sf0.001 python bench.py
+
+Performance claims come from perfbench/run.py (per-layer spans with
+--trace 1); this script is the single-line throughput summary.
 """
 
 from __future__ import annotations
 
 import json
+import multiprocessing as mp
 import os
 import sys
 import time
@@ -33,9 +34,34 @@ from identity_matching_spark.corpus import generate_files
 from identity_matching_spark.plans.pipeline import run_pipeline
 from identity_matching_spark.session import build_session, default_cpus
 
+# scoring-kernel pair list is replicated this many times so the timed window
+# measures steady-state throughput, not job-setup latency
+KERNEL_REP = 6
+# one file per split for the kernel scan (see run_scoring_kernel)
+KERNEL_OPEN_COST = 128 * 1024 * 1024
+
 # entities per sf: sf0.1 -> 100k entities (~267k files) so steady-state
 # compute dominates fixed per-job overhead in the throughput measurement.
 ENTITIES_PER_SF = 1_000_000
+
+
+def _burn(n):
+    x = 0
+    for i in range(n):
+        x += i * i % 7
+    return x
+
+
+def hw_calibration(procs: int, reps: int = 3) -> float:
+    """Pure-CPU units/sec at `procs` processes, median of `reps` burns (a
+    single ~1.5 s burn swings ±30% with scheduler placement)."""
+    vals = []
+    for _ in range(reps):
+        t0 = time.time()
+        with mp.Pool(procs) as p:
+            p.map(_burn, [3_000_000] * procs * 6)
+        vals.append(procs * 6 / (time.time() - t0))
+    return sorted(vals)[reps // 2]
 
 
 def sf_of(sf_dir: str) -> float:
@@ -170,50 +196,22 @@ def run_scoring_kernel(spark, n_entities: int):
     # executors in cluster mode — the event-log profile that exposed this).
     # A high open-cost makes each file its own split, restoring the
     # intended 64 tasks. Dynamic SQL conf, scoped to the kernel section
-    # and restored after, so the e2e legs are untouched.
-    # SPARK_GRAFT_OPEN_COST=0 keeps Spark's default packing (the A/B
-    # control arm — tools/kernel_ab.py interleaves the two).
-    open_cost = int(os.environ.get("SPARK_GRAFT_OPEN_COST", str(128 * 1024 * 1024)))
+    # and restored after, so the e2e run is untouched.
     prev_open_cost = spark.conf.get("spark.sql.files.openCostInBytes", None)
-    if open_cost:
-        spark.conf.set("spark.sql.files.openCostInBytes", str(open_cost))
+    spark.conf.set("spark.sql.files.openCostInBytes", str(KERNEL_OPEN_COST))
     try:
         records = spark.read.parquet(rec_path)
-        # Replicate the pair list so the timed section runs tens of seconds at
-        # every parallelism level — measures steady-state scoring throughput,
-        # not job-setup latency. SPARK_GRAFT_KERNEL_REP overrides (the
-        # cache-resident scaling experiment at small sf needs a higher K for
-        # the same timed-window length).
-        K = int(os.environ.get("SPARK_GRAFT_KERNEL_REP", "6"))
-        # A/B knob (VERDICT r4 #6): SPARK_GRAFT_PAIR_ORDER=shuffled scans a
-        # scrambled twin of the pair list instead of the left_didx-clustered
-        # one — same files/rows/plan, only the probe-key ORDER differs, so the
-        # pair (clustered, shuffled) isolates what near-sequential walks of
-        # the dense broadcast row pages are worth. tools/kernel_order_ab.py
-        # runs the interleaved measurement.
-        if os.environ.get("SPARK_GRAFT_PAIR_ORDER", "clustered") == "shuffled":
-            shuf_path = pair_path.replace(".parquet", "_shuf.parquet")
-            if not os.path.exists(os.path.join(shuf_path, "_SUCCESS")):
-                (
-                    spark.read.parquet(pair_path)
-                    .withColumn("_h", F.xxhash64("left_didx", "right_didx"))
-                    .repartitionByRange(64, "_h")
-                    .sortWithinPartitions("_h")
-                    .drop("_h")
-                    .write.mode("overwrite").parquet(shuf_path)
-                )
-            pair_path = shuf_path
         pairs_once = spark.read.parquet(pair_path)
         pairs = (
             pairs_once
-            .withColumn("rep", F.explode(F.sequence(F.lit(0), F.lit(K - 1))))
+            .withColumn("rep", F.explode(F.sequence(F.lit(0), F.lit(KERNEL_REP - 1))))
             .drop("rep")
         )
         n_records = records.count()  # sizes the broadcast attaches, outside the window
         t0 = time.time()
         # jw_pairs = the unreplicated scan: the distinct-stem-pair table is a
         # DISTINCT over the pair SET, so the replicas add zero information —
-        # identical table, 1/K the scan (production pair lists aren't
+        # identical table, 1/KERNEL_REP the scan (production pair lists aren't
         # replicated; the replication exists only to lengthen this window).
         flagged = compare_pairs_fuzzy(
             pairs, records, MatchConfig(), jw_pairs=pairs_once, n_records=n_records
@@ -238,11 +236,10 @@ def run_scoring_kernel(spark, n_entities: int):
         if flagged.jw_stem_cache is not None:
             flagged.jw_stem_cache.unpersist()
     finally:
-        if open_cost:
-            if prev_open_cost is None:
-                spark.conf.unset("spark.sql.files.openCostInBytes")
-            else:
-                spark.conf.set("spark.sql.files.openCostInBytes", prev_open_cost)
+        if prev_open_cost is None:
+            spark.conf.unset("spark.sql.files.openCostInBytes")
+        else:
+            spark.conf.set("spark.sql.files.openCostInBytes", prev_open_cost)
     return wall, n
 
 
@@ -257,44 +254,13 @@ def main():
     sf = sf_of(sf_dir)
     n_entities = max(200, int(ENTITIES_PER_SF * sf))
 
-    # Host-capacity stamp (VERDICT r3 #2/#6): the sandbox host is
-    # tenant-oversubscribed, so absolute wall times from different bench
-    # windows are not comparable without knowing what the host delivered.
+    # Host-capacity stamp: the host is shared, so absolute wall times from
+    # different runs are only comparable alongside what the host delivered.
     # One pure-CPU calibration burn at this run's width, emitted in the
-    # JSON line, makes every BENCH_rN file self-interpreting.
-    sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "tools"))
-    from bench_scaling import hw_calibration_med
-
-    # Median-of-3: a single ~1.5 s burn swings ±30% at low widths, and
-    # this value feeds the 0.93-bar fail-fast below — a noise-dip there
-    # aborts a healthy leg (BENCH/e2e_leg_w2_2.json died exactly so).
-    cal = hw_calibration_med(cpus, reps=3)
-
-    # Leg-level fail-fast (scaling harness): the host's capacity can dip
-    # for a few minutes MID-window, invisible to the window-bracket
-    # calibrations (BENCH/bench_scaling_degraded_watch18.json: clean
-    # brackets, hi leg started at 72% capacity). When the harness passes
-    # its window-start bar via SPARK_GRAFT_MIN_CAL, a leg that opens on a
-    # sagged host aborts here — before paying for a corrupted measurement.
-    min_cal = float(os.environ.get("SPARK_GRAFT_MIN_CAL", "0"))
-    if min_cal and cal < min_cal:
-        print(json.dumps({
-            "error": "leg_cal_degraded",
-            "cal_units_per_sec": round(cal, 1),
-            "required": round(min_cal, 1),
-            "cpus": cpus,
-        }))
-        sys.exit(17)
+    # JSON line, makes every result self-interpreting.
+    cal = hw_calibration(cpus)
 
     spark = build_session("bench", cpus=cpus)
-
-    # Section gating (SPARK_GRAFT_SECTIONS = all | kernel | e2e): the
-    # scaling harness runs the kernel legs of BOTH widths back-to-back in
-    # one short matched window (the north-rule metric needs a drift-free
-    # comparison far more than it needs to share a JVM with the e2e run),
-    # then the e2e legs as their own section. Default "all" = the
-    # original single-process bench.
-    sections = os.environ.get("SPARK_GRAFT_SECTIONS", "all")
 
     out = {
         "metric": "e2e_pipeline_sec",
@@ -302,47 +268,38 @@ def main():
         "sf": sf,
         "cpus": cpus,
         "cal_units_per_sec": round(cal, 1),
-        "sections": sections,
     }
 
-    if sections in ("all", "e2e"):
-        wall, pairs_scored, n_clusters, n_rows = run_headline(spark, n_entities)
-        out.update(
-            value=round(wall, 3),
-            corpus_rows=n_rows,
-            pairs_scored=pairs_scored,
-            pairs_per_sec=round(pairs_scored / wall, 1) if wall > 0 else None,
-            n_clusters=n_clusters,
-        )
-    if sections in ("all", "kernel"):
-        if sections == "kernel":
-            # in "all" mode run_headline already warmed the UDF worker
-            # pool; kernel-only legs must pay that cost OUTSIDE the
-            # timed window too
-            warmup(spark)
-        kwall, kpairs = run_scoring_kernel(spark, n_entities)
-        out.update(
-            kernel_sec=round(kwall, 3),
-            kernel_pairs=kpairs,
-            kernel_pairs_per_sec=round(kpairs / kwall, 1) if kwall > 0 else None,
-        )
+    wall, pairs_scored, n_clusters, n_rows = run_headline(spark, n_entities)
+    out.update(
+        value=round(wall, 3),
+        corpus_rows=n_rows,
+        pairs_scored=pairs_scored,
+        pairs_per_sec=round(pairs_scored / wall, 1) if wall > 0 else None,
+        n_clusters=n_clusters,
+    )
+    kwall, kpairs = run_scoring_kernel(spark, n_entities)
+    out.update(
+        kernel_sec=round(kwall, 3),
+        kernel_pairs=kpairs,
+        kernel_pairs_per_sec=round(kpairs / kwall, 1) if kwall > 0 else None,
+    )
 
-    if sections in ("all", "e2e"):
-        # headline operator queries over the driver-provided tables.
-        # Drop pipeline/kernel persisted blocks first: query wall times must
-        # measure the query, not eviction churn against leftover cache.
-        spark.catalog.clearCache()
+    # headline operator queries over the driver-provided tables.
+    # Drop pipeline/kernel persisted blocks first: query wall times must
+    # measure the query, not eviction churn against leftover cache.
+    spark.catalog.clearCache()
 
-        import __spark_entry__ as entry
+    import __spark_entry__ as entry
 
-        qs = entry.queries()
-        qtimes = {}
-        for name in ("scored_pairs", "clusters", "dedup_exact", "minhash_lsh_portable",
-                     "ann_topk", "agg_orders", "region_revenue"):
-            t = time.time()
-            qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-            qtimes[name] = round(time.time() - t, 3)
-        out["queries"] = qtimes
+    qs = entry.queries()
+    qtimes = {}
+    for name in ("scored_pairs", "clusters", "dedup_exact", "minhash_lsh_portable",
+                 "ann_topk", "agg_orders", "region_revenue"):
+        t = time.time()
+        qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
+        qtimes[name] = round(time.time() - t, 3)
+    out["queries"] = qtimes
 
     print(json.dumps(out))
     spark.stop()

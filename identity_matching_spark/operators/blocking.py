@@ -139,6 +139,11 @@ def blocking_keys(records: DataFrame, config: MatchConfig) -> DataFrame:
 class BlockingResult:
     pairs: DataFrame        # (left_id, right_id, left_didx, right_didx), left<right, deduped
     block_stats: DataFrame  # (family, blocking_key, n_records, action) for oversized blocks
+    # caches the pair plan reads, for the caller to unpersist once the pairs
+    # are materialized: the derived key table and, above the driver-finish
+    # limit, the guard key set (None below it)
+    keyed_cache: DataFrame | None = None
+    guard_cache: DataFrame | None = None
 
 
 def candidate_pairs(
@@ -200,8 +205,8 @@ def candidate_pairs(
     # concurrently — against a cold cache each would recompute the
     # explode+MinHash key derivation. Knowing the rows, only the guard
     # branches that have any are planned. Above the limit the joins below
-    # read the cached guard set, which stays cached as long as keyed does.
-    rows, _ = collect_small(guard)
+    # read the cached guard set, handed back with keyed.
+    rows, guard_cache = collect_small(guard)
     if rows is not None:
         guard = local_relation(
             records.sparkSession,
@@ -324,4 +329,6 @@ def candidate_pairs(
             "right_didx",
         )
     )
-    return BlockingResult(pairs=pairs, block_stats=block_stats)
+    return BlockingResult(
+        pairs=pairs, block_stats=block_stats, keyed_cache=keyed, guard_cache=guard_cache
+    )

@@ -179,6 +179,13 @@ def connected_components(
             df.write.mode("overwrite").parquet(path)
         return spark.read.parquet(path)
 
+    def _release(df: DataFrame) -> None:
+        # A local checkpoint's blocks outlive the run unless dropped:
+        # DataFrame.unpersist only covers cache/persist, so reach the
+        # checkpointed RDD under the frame's LogicalRDD.
+        if ckpt is None:
+            df._jdf.logicalPlan().rdd().unpersist(False)
+
     done: list[int] = []
     manifest = os.path.join(ckpt, "cc_manifest.json") if ckpt is not None else None
     if ckpt is not None:
@@ -223,19 +230,24 @@ def connected_components(
         with open(manifest, "w") as fh:
             _json.dump({"n": sig[0], "h": str(sig[1])}, fh)
     if fits(sig[0], edges=True):
-        return _finish_in_driver(e)
+        out = _finish_in_driver(e)
+        _release(e)
+        return out
     for it in range(start_it, start_it + config.cc_max_iterations):
         e2 = _materialize(_small_star(_large_star(e)), it)
-        sig2 = _sig(e2)
+        sig2 = _sig(e2)  # computes every partition of e2: e is spent
         if on_iteration is not None:
             on_iteration(it, e2)
+        _release(e)
         e = e2
         if sig2 == sig:
             break
         sig = sig2
         if fits(sig[0], edges=True):
             # small enough: one collect replaces the remaining rounds
-            return _finish_in_driver(e)
+            out = _finish_in_driver(e)
+            _release(e)
+            return out
     # After convergence every edge points node -> component min.
     members = e.select(F.col("src").alias("record_id"), F.col("dst").alias("cluster_id"))
     reps = e.select(F.col("dst").alias("record_id"), F.col("dst").alias("cluster_id"))

@@ -67,10 +67,11 @@ class PipelineResult:
 
     def cleanup(self) -> None:
         """Unpersist every cache this run pinned: the in-memory stage
-        barriers (records, scored pairs, and pairs when fuzzy) and, only
-        above ``config.DRIVER_FINISH_ROWS``, the dense-id slim map, the
-        phonetic vocabulary and the distinct-stem JW table (their
-        driver-finished forms are local relations and pin nothing). Call after the outputs have been
+        barriers (records, scored pairs, and pairs when fuzzy), blocking's
+        key table and, only above ``config.DRIVER_FINISH_ROWS``, the
+        dense-id slim map, the phonetic vocabulary, blocking's guard key
+        set and the distinct-stem JW table (their driver-finished forms
+        are local relations and pin nothing). Call after the outputs have been
         materialized; long-lived sessions otherwise accumulate cached
         blocks across runs."""
         for df in self.pinned:
@@ -189,6 +190,8 @@ def run_pipeline(
 
     def build_pairs():
         b = candidate_pairs(records, config, n_records=st.rows["records"])
+        st.pin(b.keyed_cache)
+        st.pin(b.guard_cache)
         stats.append(st.side("block_stats", b.block_stats))
         return b.pairs
 

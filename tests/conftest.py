@@ -16,6 +16,9 @@ def spark():
         "identity_matching_tests",
         cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "8")),
         shuffle_partitions=8,
+        # a generated method over the JVM's 64 KB limit fails the test
+        # instead of silently running interpreted
+        extra_conf={"spark.sql.codegen.fallback": "false"},
     )
     yield s
     s.stop()

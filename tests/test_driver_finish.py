@@ -126,6 +126,34 @@ def test_cache_handoff(spark, files, monkeypatch):
         df.unpersist()
 
 
+@pytest.mark.parametrize("limit", [None, 0], ids=["driver", "distributed"])
+def test_cleanup_releases_run_caches(spark, files, monkeypatch, limit):
+    """An in-memory run plus cleanup() leaves the session's persisted RDDs
+    as it found them: blocking's key table and, with the limit at 0, its
+    cached guard key set are pinned with the run's other caches, and CC's
+    local checkpoint is dropped once the driver finish has collected it."""
+    if limit is not None:
+        monkeypatch.setattr(config_mod, "DRIVER_FINISH_ROWS", limit)
+    files.count()  # the module fixture's own cache is not the run's
+
+    def persisted():
+        return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    cfg = MatchConfig()
+    if limit is not None:
+        # exact-only: the fuzzy caches' release is covered by
+        # test_cache_handoff, and their pandas UDFs would triple the run.
+        # Small block caps give the guard set rows, so it is cached.
+        cfg = cfg.with_(enable_fuzzy=False, max_block_size=4, identity_star_threshold=2)
+
+    before = persisted()
+    res = run_pipeline(files, cfg)
+    if limit is not None:
+        assert res.block_stats.count() > 0
+    res.cleanup()
+    assert persisted() == before
+
+
 def test_guarded_blocking_equal_on_both_paths(spark, monkeypatch):
     """Every guard branch has keys (star, sub-salted, hot-salted): pairs and
     block_stats are identical on the driver-finished and distributed

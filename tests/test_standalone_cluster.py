@@ -6,10 +6,9 @@ pip pyspark deploy classes — tools/cluster_harness.py), submits from a
 NEUTRAL cwd so the package can only import from the zip, and checks the
 executor JVM really ran the job (pairs scored + clusters written).
 
-tools/bench_cluster.py scales the same launch mode to 1-vs-4 executors
-for the scaling-efficiency evidence; this test keeps the mechanism from
-regressing (session.py SPARK_GRAFT_MASTER wiring, driver-host binding,
-python-worker spawn on an executor that imports only from --py-files).
+This test keeps the mechanism from regressing (session.py
+SPARK_GRAFT_MASTER wiring, driver-host binding, python-worker spawn on an
+executor that imports only from --py-files).
 """
 
 import json

@@ -121,19 +121,16 @@ def test_gate_compiles_without_codegen_fallback(spark, tmp_path):
         c = clusters.agg(F.count("*"), F.countDistinct("cluster_id")).first()
         return records.count(), c[0], c[1]
 
-    prev = spark.conf.get("spark.sql.codegen.fallback")
-    spark.conf.set("spark.sql.codegen.fallback", "false")
+    # the session fixture sets this for every test; the check depends on it
+    assert spark.conf.get("spark.sql.codegen.fallback") == "false"
+    res = run_pipeline(files, MatchConfig())
     try:
-        res = run_pipeline(files, MatchConfig())
-        try:
-            want = shape(res.records, res.clusters)
-        finally:
-            res.cleanup()
-        out = run_pipeline(files, MatchConfig(), checkpoint_dir=str(tmp_path / "ckpt"))
-        assert shape(out.records, out.clusters) == want
-        assert want[0] == want[1] > 0
+        want = shape(res.records, res.clusters)
     finally:
-        spark.conf.set("spark.sql.codegen.fallback", prev)
+        res.cleanup()
+    out = run_pipeline(files, MatchConfig(), checkpoint_dir=str(tmp_path / "ckpt"))
+    assert shape(out.records, out.clusters) == want
+    assert want[0] == want[1] > 0
 
 
 def test_no_match_outcome_branch(spark, tmp_path):
@@ -163,27 +160,21 @@ def test_no_match_outcome_branch(spark, tmp_path):
     assert len(row["outcome_id"]) == 36  # uuid fullUrl analog (F8)
 
 
-def test_match_params_quirk_and_enforcement(spark, tmp_path):
+def test_match_params_quirk_and_enforcement(spark, tmp_path, capsys):
     """P1: onlyCertainMatches/count are parsed but NOT applied by default
     (reference parity, IdentityMatching.java — no use after :248);
     --enforce-params deliberately applies them."""
-    import json
-    import subprocess
-    import sys
-
-    from identity_matching_spark.corpus import generate_files
+    from identity_matching_spark import cli
 
     src = str(tmp_path / "src")
     generate_files(spark, 60).drop("entity_id").write.parquet(src)
 
     def run(*extra):
         out = str(tmp_path / ("out" + str(len(extra))))
-        r = subprocess.run(
-            [sys.executable, "-m", "identity_matching_spark.cli", "--input", src,
-             "--output", out, "--no-fuzzy", "--cpus", "4", *extra],
-            capture_output=True, text=True, timeout=300,
-        )
-        line = [l for l in r.stdout.splitlines() if l.startswith("{")][-1]
+        capsys.readouterr()
+        rc = cli.main(["--input", src, "--output", out, "--no-fuzzy", "--cpus", "4", *extra])
+        assert rc == 0
+        line = [l for l in capsys.readouterr().out.splitlines() if l.startswith("{")][-1]
         return json.loads(line), out
 
     quirk, _ = run("--count", "5", "--only-certain")

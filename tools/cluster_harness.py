@@ -18,14 +18,13 @@ with SPARK_GRAFT_MASTER pointed at it (identity_matching_spark.session)
 or `spark-submit --master` runs against it unchanged. Workers are
 taskset-pinned to disjoint 2-core slices (worker i -> cores 2i,2i+1) so
 "4 workers" really means 8 distinct cores, and executor + python-udf
-processes inherit the slice — the same pinning discipline as the
-local-mode scaling legs (tools/bench_scaling.py). The master and the
+processes inherit the slice — the same pinning discipline as
+taskset-pinned local-mode runs. The master and the
 driver stay unpinned: on a real cluster they are separate nodes, and
 keeping their (small, equal at both widths) overhead off the executor
 cores keeps the N vs 4N ratio an executor-scaling measurement.
 
-Used by tools/bench_cluster.py (executor-scaling legs) and
-tests/test_standalone_cluster.py (launch-mode integration test).
+Used by tests/test_standalone_cluster.py (launch-mode integration test).
 """
 
 from __future__ import annotations
