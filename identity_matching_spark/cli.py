@@ -111,7 +111,11 @@ def main(argv: list[str] | None = None) -> int:
     clusters.write.mode("overwrite").parquet(f"{args.output}/clusters")
     res.cleanup()
 
-    n_pairs = spark.read.parquet(f"{args.output}/scored_pairs").count()
+    # one read-back job counts the written pairs and their match edges
+    n_pairs, n_edges = spark.read.parquet(f"{args.output}/scored_pairs").agg(
+        F.count(F.lit(1)),
+        F.count(F.when(F.col("score") >= F.lit(args.cluster_threshold), 1)),
+    ).first()
     n_clusters = (
         spark.read.parquet(f"{args.output}/clusters").select("cluster_id").distinct().count()
     )
@@ -119,11 +123,6 @@ def main(argv: list[str] | None = None) -> int:
     # OperationOutcome analog — one row with a fresh uuid identity
     # (IdentityMatching.java:486-495: OperationOutcome entry with uuid
     # fullUrl, severity WARNING and IssueType NOTFOUND).
-    n_edges = (
-        spark.read.parquet(f"{args.output}/scored_pairs")
-        .filter(F.col("score") >= F.lit(args.cluster_threshold))
-        .count()
-    )
     no_match = n_edges == 0
     if no_match:
         outcome = spark.range(1).select(

@@ -4,11 +4,11 @@ The reference deployment configures COLOGNE (given name) and SOUNDEX
 (family name); HAPI's matcher slot also offers METAPHONE. Spark has a
 builtin ``F.soundex``; Cologne ("Kölner Phonetik", Postel 1969) and a
 basic Metaphone are implemented here from their public algorithm
-descriptions as plain Python functions. ``compare.enrich_phonetic``
-applies them once per distinct normalized value: on the driver while the
-vocabulary is under ``config.DRIVER_FINISH_ROWS`` values, else through
-the **batched pandas UDF** wrappers below (Arrow transfer, no per-row
-Python serde)."""
+descriptions as plain Python functions. They run once per distinct
+normalized value: on the driver (``compare.phonetic_codes``) while the
+records or the vocabulary fit ``config.DRIVER_FINISH_ROWS``, else
+through the **batched pandas UDF** wrappers below (Arrow transfer, no
+per-row Python serde) in ``compare.enrich_phonetic``."""
 
 from __future__ import annotations
 

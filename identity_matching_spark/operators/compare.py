@@ -259,6 +259,39 @@ def _phonetic_twins(df: DataFrame) -> DataFrame:
     )
 
 
+def phonetic_keys() -> list[Column]:
+    """The normalized values the phonetic codes are taken of: ``_nd1``
+    (the given-name analog ``dir1``) and ``_nst`` (the family-name analog
+    ``stem``)."""
+    from identity_matching_spark.functions.normalize import hapi_norm
+
+    return [hapi_norm(F.col("dir1")).alias("_nd1"), hapi_norm(F.col("stem")).alias("_nst")]
+
+
+def phonetic_codes(given: list, family: list) -> tuple[list, list]:
+    """Driver-side ``cologne_dir1`` of ``given`` and ``metaphone_stem`` of
+    ``family``, value for value. Each distinct value is encoded once; None
+    stays None."""
+    from identity_matching_spark.functions.phonetic import cologne_encode, metaphone_encode
+
+    def encode(values: list, fn) -> list:
+        codes = {v: fn(v) for v in set(values) if v is not None}
+        return [codes.get(v) for v in values]
+
+    return encode(given, cologne_encode), encode(family, metaphone_encode)
+
+
+def with_soundex_twins(records: DataFrame) -> DataFrame:
+    """Finish records that carry ``cologne_dir1`` and ``metaphone_stem``:
+    ``soundex_stem`` (Spark's builtin over the normalized stem) and the
+    three h64 twins, appended in that order."""
+    from identity_matching_spark.functions.normalize import hapi_norm
+
+    return _phonetic_twins(
+        records.withColumn("soundex_stem", F.soundex(hapi_norm(F.col("stem"))))
+    )
+
+
 def enrich_phonetic(records: DataFrame) -> DataFrame:
     """Phonetic encodings per record: COLOGNE on the given-name analog,
     SOUNDEX/METAPHONE on the family-name analog (mdm-rules.json:25-42).
@@ -269,23 +302,16 @@ def enrich_phonetic(records: DataFrame) -> DataFrame:
     Zipfian and tiny relative to the corpus: up to
     ``config.DRIVER_FINISH_ROWS`` distinct values (both columns together)
     are collected once and encoded on the driver with
-    ``phonetic.cologne_encode``/``metaphone_encode``; a larger vocabulary
-    is encoded by the batched pandas UDFs over the cached distinct values,
-    handed back as ``_phonetic_vocab_cache`` on the result (None on the
-    driver path) for the caller to unpersist.
+    ``phonetic_codes``; a larger vocabulary is encoded by the batched
+    pandas UDFs over the cached distinct values, handed back as
+    ``_phonetic_vocab_cache`` on the result (None on the driver path) for
+    the caller to unpersist. The pipeline's records stage calls this only
+    above the limit: below it ``normalize.with_dense_ids(phonetic=True)``
+    finishes the codes from the dense-id collect.
     """
-    from identity_matching_spark.functions.normalize import hapi_norm
-    from identity_matching_spark.functions.phonetic import (
-        cologne_encode,
-        cologne_udf,
-        metaphone_encode,
-        metaphone_udf,
-    )
-    base = records.select(
-        "*",
-        hapi_norm(F.col("dir1")).alias("_nd1"),
-        hapi_norm(F.col("stem")).alias("_nst"),
-    )
+    from identity_matching_spark.functions.phonetic import cologne_udf, metaphone_udf
+
+    base = records.select("*", *phonetic_keys())
     d1 = base.select(F.col("_nd1")).where(F.col("_nd1").isNotNull()).distinct()
     st = base.select(F.col("_nst")).where(F.col("_nst").isNotNull()).distinct()
     vocab_df = d1.select(F.lit(True).alias("_given"), F.col("_nd1").alias("_v")).unionByName(
@@ -296,14 +322,13 @@ def enrich_phonetic(records: DataFrame) -> DataFrame:
         spark = records.sparkSession
         given = [r["_v"] for r in vocab if r["_given"]]
         family = [r["_v"] for r in vocab if not r["_given"]]
+        cologne, metaphone = phonetic_codes(given, family)
         cologne_tab = local_relation(
-            spark,
-            {"_nd1": given, "cologne_dir1": [cologne_encode(v) for v in given]},
-            "_nd1 string, cologne_dir1 string",
+            spark, {"_nd1": given, "cologne_dir1": cologne}, "_nd1 string, cologne_dir1 string"
         )
         metaphone_tab = local_relation(
             spark,
-            {"_nst": family, "metaphone_stem": [metaphone_encode(v) for v in family]},
+            {"_nst": family, "metaphone_stem": metaphone},
             "_nst string, metaphone_stem string",
         )
     else:
@@ -313,10 +338,9 @@ def enrich_phonetic(records: DataFrame) -> DataFrame:
         metaphone_tab = vocab_df.where(~F.col("_given")).select(
             F.col("_v").alias("_nst"), metaphone_udf(F.col("_v")).alias("metaphone_stem")
         )
-    out = _phonetic_twins(
+    out = with_soundex_twins(
         base.join(F.broadcast(cologne_tab), "_nd1", "left")
         .join(F.broadcast(metaphone_tab), "_nst", "left")
-        .withColumn("soundex_stem", F.soundex(F.col("_nst")))
         .drop("_nd1", "_nst")
     )
     out._phonetic_vocab_cache = vocab_cache

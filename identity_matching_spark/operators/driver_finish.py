@@ -9,8 +9,10 @@ over a few hundred rows. At or below its limit (``fits``:
 ``config.DRIVER_FINISH_ROWS`` rows, ``config.DRIVER_FINISH_EDGES`` for
 the edge set, both measured crossovers) each is collected once, finished
 with the plain Python functions and handed back as a local relation,
-which the consumers broadcast. Above it the callers keep their
-distributed plans.
+which the consumers broadcast. The dense-id map and the phonetic
+dictionaries of the pipeline's records stage share one collect
+(``normalize.with_dense_ids(phonetic=True)``) and one local relation.
+Above the limit the callers keep their distributed plans.
 """
 
 from __future__ import annotations
@@ -28,6 +30,17 @@ def fits(n_rows: int, edges: bool = False) -> bool:
     return n_rows <= (config.DRIVER_FINISH_EDGES if edges else config.DRIVER_FINISH_ROWS)
 
 
+def persist_owned(df: DataFrame) -> DataFrame | None:
+    """Persist ``df`` unless a cache of its plan already exists. Returns
+    ``df`` when this call cached it, for the caller to unpersist when
+    done; None when the cache belongs to someone else, whose cache an
+    unpersist would drop."""
+    level = df.storageLevel
+    if level.useMemory or level.useDisk or level.useOffHeap:
+        return None
+    return df.persist(StorageLevel.MEMORY_AND_DISK)
+
+
 def collect_small(df: DataFrame) -> tuple[list | None, DataFrame | None]:
     """``(rows, None)`` when ``df`` fits the driver, else ``(None, cache)``.
 
@@ -37,16 +50,13 @@ def collect_small(df: DataFrame) -> tuple[list | None, DataFrame | None]:
     cached frame, for the caller to unpersist when done; None when ``df``
     was already cached before the call (its owner keeps it). Below the
     limit a cache made here is dropped at once, so nothing stays pinned."""
-    level = df.storageLevel
-    owned = not (level.useMemory or level.useDisk or level.useOffHeap)
-    if owned:
-        df.persist(StorageLevel.MEMORY_AND_DISK)
+    owned = persist_owned(df)
     rows = df.limit(config.DRIVER_FINISH_ROWS + 1).collect()
     if fits(len(rows)):
-        if owned:
-            df.unpersist()
+        if owned is not None:
+            owned.unpersist()
         return rows, None
-    return None, df if owned else None
+    return None, owned
 
 
 def local_relation(

@@ -100,6 +100,7 @@ def with_dense_ids(
     prefix_nibbles: int | None = None,
     broadcast_limit: int = DENSE_ID_BROADCAST_LIMIT,
     target_bucket_rows: int = DENSE_ID_TARGET_BUCKET_ROWS,
+    phonetic: bool = False,
 ) -> DataFrame:
     """Intern record ids to DENSE longs: ``didx`` = rank of record_id.
 
@@ -117,6 +118,16 @@ def with_dense_ids(
     ranks equal the distributed path's. The slim id column is cached only
     for that collect and dropped right after it, so nothing stays pinned
     and the records plan stays one broadcast join deep.
+
+    With ``phonetic`` the same collect also carries each record's
+    normalized given- and family-name analogs (``compare.phonetic_keys``),
+    so the driver finish hands back ONE local relation
+    ``(record_id, didx, cologne_dir1, metaphone_stem)``; ``soundex_stem``
+    and the h64 twins are added as Column expressions, with the columns in
+    ``compare.enrich_phonetic``'s order. Above the limit ``phonetic`` only
+    widens the cached slim projection: the result carries dense ids alone,
+    and the caller runs ``enrich_phonetic`` (no ``cologne_dir1`` column
+    tells it to).
 
     Scale shape above the limit (no global window — a single-partition
     sort of 10^12 ids is a non-starter): record_id is fixed-width
@@ -146,7 +157,7 @@ def with_dense_ids(
     slim exchanges — the unavoidable arbitrary-scale plan). The persisted
     slim projection is handed to the caller on the result as
     ``_dense_slim_cache`` — the id map keeps reading it lazily, so it
-    stays pinned until pipeline cleanup unpersists it.
+    stays pinned until the pipeline's records barrier has read it.
     """
     import math
 
@@ -155,16 +166,25 @@ def with_dense_ids(
     if "didx" in records.columns:  # already interned — idempotent
         return records
     spark = records.sparkSession
-    slim = records.select("record_id")
+    if phonetic:
+        from identity_matching_spark.operators.compare import (
+            phonetic_codes,
+            phonetic_keys,
+            with_soundex_twins,
+        )
+    slim = records.select("record_id", *(phonetic_keys() if phonetic else ()))
     ids, slim_cache = collect_small(slim)
     if ids is not None:
-        ordered = sorted(r[0] for r in ids)
-        idmap = local_relation(
-            spark,
-            {"record_id": ordered, "didx": list(range(len(ordered)))},
-            "record_id string, didx long",
-        )
-        return records.join(F.broadcast(idmap), "record_id")
+        ordered = sorted(ids, key=lambda r: r[0])
+        cols = {"record_id": [r[0] for r in ordered], "didx": list(range(len(ordered)))}
+        schema = "record_id string, didx long"
+        if phonetic:
+            cols["cologne_dir1"], cols["metaphone_stem"] = phonetic_codes(
+                [r[1] for r in ordered], [r[2] for r in ordered]
+            )
+            schema += ", cologne_dir1 string, metaphone_stem string"
+        out = records.join(F.broadcast(local_relation(spark, cols, schema)), "record_id")
+        return with_soundex_twins(out) if phonetic else out
 
     def _bucket(nib: int):
         return F.conv(F.substring("record_id", 1, nib), 16, 10).cast("long")

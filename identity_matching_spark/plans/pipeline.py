@@ -20,12 +20,16 @@ modes differ only in how a stage is materialized (``_Stages.run``):
   instead of rebuilt — up to the first stage that has to be rebuilt, after
   which every later stage is rebuilt too (north_rule resumability).
 
-The small relations along the way — the dense-id map, the phonetic
-dictionaries, blocking's guard keys and the distinct-stem JW table — are
-finished on the driver below ``config.DRIVER_FINISH_ROWS``
-(``operators/driver_finish.py``): one collect each, returned as broadcast
-local relations, so the default path starts no Python worker and pins no
-helper cache.
+The records stage (``build_records``) evaluates the sha-heavy normalize +
+validation-gate plan once: the gated relation is cached before its first
+consumer and released as soon as the stage's barrier has read it.
+
+The small relations along the way are finished on the driver below
+``config.DRIVER_FINISH_ROWS`` (``operators/driver_finish.py``) and
+returned as broadcast local relations, so the default path starts no
+Python worker and pins no helper cache: the dense-id map and the phonetic
+dictionaries from the records stage's one collect, blocking's guard keys
+and the distinct-stem JW table from one collect each.
 """
 
 from __future__ import annotations
@@ -46,6 +50,7 @@ from identity_matching_spark.operators.cluster import (
     connected_components,
 )
 from identity_matching_spark.operators.compare import compare_pairs
+from identity_matching_spark.operators.driver_finish import persist_owned
 from identity_matching_spark.operators.grade import grade_pairs
 from identity_matching_spark.operators.normalize import normalize_files
 from identity_matching_spark.operators.validate import validation_gate
@@ -68,12 +73,13 @@ class PipelineResult:
     def cleanup(self) -> None:
         """Unpersist every cache this run pinned: the in-memory stage
         barriers (records, scored pairs, and pairs when fuzzy), blocking's
-        key table and, only above ``config.DRIVER_FINISH_ROWS``, the
-        dense-id slim map, the phonetic vocabulary, blocking's guard key
-        set and the distinct-stem JW table (their driver-finished forms
-        are local relations and pin nothing). Call after the outputs have been
-        materialized; long-lived sessions otherwise accumulate cached
-        blocks across runs."""
+        key table and, only above ``config.DRIVER_FINISH_ROWS``, blocking's
+        guard key set and the distinct-stem JW table (their
+        driver-finished forms are local relations and pin nothing). The
+        records stage's own caches are already gone: they are released at
+        its barrier. Call after the outputs have been materialized;
+        long-lived sessions otherwise accumulate cached blocks across
+        runs."""
         for df in self.pinned:
             df.unpersist()
         self.pinned.clear()
@@ -101,11 +107,20 @@ class _Stages:
         self.store = SnapshotStore(spark, checkpoint_dir) if checkpoint_dir else None
         self.resume = resume
         self.rows: dict[str, int | None] = {}  # rows_out per stage, when known
-        self.pinned: list[DataFrame] = []
+        self.pinned: list[DataFrame] = []  # released by PipelineResult.cleanup
+        # caches only the stage being built reads: released as soon as its
+        # barrier count or snapshot write has read them
+        self.spent: list[DataFrame] = []
 
     def pin(self, df: DataFrame | None) -> None:
         if df is not None:
             self.pinned.append(df)
+
+    @staticmethod
+    def _release(caches: list[DataFrame]) -> None:
+        for df in caches:
+            df.unpersist()
+        caches.clear()
 
     def run(self, name: str, build, barrier: bool = True) -> DataFrame:
         store = self.store
@@ -122,6 +137,10 @@ class _Stages:
                 # = each relation computed exactly once.
                 self.pin(df.persist(StorageLevel.MEMORY_AND_DISK))
                 self.rows[name] = df.count()
+                self._release(self.spent)
+            else:  # a lazy stage's consumers still read them
+                self.pinned.extend(self.spent)
+                self.spent.clear()
             return df
         if self.resume and store.has(name):
             self.rows[name] = store.rows_out(name)
@@ -130,9 +149,8 @@ class _Stages:
         self.resume = False
         t0 = time.time()
         store.write(name, build())
-        for df in self.pinned:  # the stage's helper caches, now on disk
-            df.unpersist()
-        self.pinned.clear()
+        self._release(self.pinned)  # the stage's helper caches, now on disk
+        self._release(self.spent)
         parts = store.partition_metrics(name)
         self.rows[name] = sum(p["rows"] for p in parts)
         store.log_lineage(
@@ -152,6 +170,39 @@ class _Stages:
         return self.store.read(name)
 
 
+def build_records(files: DataFrame, config: MatchConfig) -> tuple[DataFrame, list[DataFrame]]:
+    """The records stage: normalize -> validation gate -> dense ids ->
+    phonetic codes. Returns the records and the caches only this stage
+    reads, for the caller to release once it has materialized them.
+
+    The gated relation is persisted before its first consumer (unless a
+    cache of the same plan already exists, which is then left to its
+    owner), so the sha-heavy normalize + gate plan is compiled and run
+    once: the dense-id collect fills the cache and the stage's barrier
+    (count or snapshot write) reads it. Below ``config.DRIVER_FINISH_ROWS``
+    that collect is the stage's only one: with fuzzy on it also carries
+    the normalized name analogs, and the dense ids and the
+    Cologne/Metaphone codes join back as one broadcast local relation.
+    Above the limit the distributed dense-id and phonetic paths read the
+    cached gated relation."""
+    from identity_matching_spark.operators.normalize import with_dense_ids
+
+    gated = validation_gate(normalize_files(files), config)
+    gated_cache = persist_owned(gated)
+    # Dense-id interning (broadcast join-back either way): every later
+    # join keys on direct-address long maps instead of 64-char sha strings.
+    records = with_dense_ids(
+        gated, prefix_nibbles=config.dense_id_nibbles, phonetic=config.enable_fuzzy
+    )
+    spent = [gated_cache, getattr(records, "_dense_slim_cache", None)]
+    if config.enable_fuzzy and "cologne_dir1" not in records.columns:
+        from identity_matching_spark.operators.compare import enrich_phonetic
+
+        records = enrich_phonetic(records)
+        spent.append(records._phonetic_vocab_cache)
+    return records, [df for df in spent if df is not None]
+
+
 def run_pipeline(
     files: DataFrame,
     config: MatchConfig | None = None,
@@ -165,27 +216,15 @@ def run_pipeline(
     config = config or MatchConfig()
     st = _Stages(files.sparkSession, checkpoint_dir, resume)
 
-    def build_records():
-        from identity_matching_spark.operators.normalize import with_dense_ids
-
-        records = validation_gate(normalize_files(files), config)
-        # Dense-id interning (a driver-sorted id map, or two slim passes
-        # above the driver-finish limit; broadcast join-back either way):
-        # every later join keys on direct-address long maps instead of
-        # 64-char sha strings.
-        records = with_dense_ids(records, prefix_nibbles=config.dense_id_nibbles)
-        st.pin(getattr(records, "_dense_slim_cache", None))
-        if config.enable_fuzzy:
-            from identity_matching_spark.operators.compare import enrich_phonetic
-
-            records = enrich_phonetic(records)
-            st.pin(records._phonetic_vocab_cache)
+    def records_stage():
+        records, spent = build_records(files, config)
+        st.spent.extend(spent)
         return records
 
     # records feeds blocking, both compare sides and the cluster join-back:
-    # materialize it so the sha-heavy normalize projection and the phonetic
-    # dictionary joins run once, linearly, before any pair fan-out.
-    records = st.run("records", build_records)
+    # materialize it so the whole records stage runs once, linearly,
+    # before any pair fan-out.
+    records = st.run("records", records_stage)
     stats: list[DataFrame] = []
 
     def build_pairs():

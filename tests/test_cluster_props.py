@@ -10,6 +10,21 @@ from identity_matching_spark.config import MatchConfig
 from identity_matching_spark.operators.cluster import connected_components
 
 
+@pytest.fixture(autouse=True)
+def _release_local_checkpoints(spark):
+    """Drop the persisted RDDs each test leaves. The star loop's last local
+    checkpoint backs the assignments it returns lazily, so
+    connected_components cannot release it; left behind, the JVM's garbage
+    collector frees it at an arbitrary later moment, which would change
+    the persisted-RDD count a later test takes around a pipeline run."""
+    rdds = spark.sparkContext._jsc.getPersistentRDDs
+    before = set(rdds().keySet())
+    yield
+    left = rdds()
+    for rdd_id in set(left.keySet()) - before:
+        left.get(rdd_id).unpersist(False)
+
+
 @pytest.fixture
 def star_loop(monkeypatch):
     """Driver-finish limit 0: the pure distributed star loop (the default

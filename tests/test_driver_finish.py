@@ -1,10 +1,12 @@
 """Driver finish for small relations (operators/driver_finish.py): below
 ``config.DRIVER_FINISH_ROWS`` the dense-id map, the phonetic dictionaries,
 the distinct-stem JW table and blocking's guard keys are finished on the
-driver. The default pipeline then plans no Python evaluation, and each
-relation equals the distributed path's (limit forced to 0) row for row."""
+driver. The default pipeline then plans no Python evaluation, each
+relation equals the distributed path's (limit forced to 0) row for row,
+and the records stage reads every source row once."""
 
 import pytest
+from pyspark.sql import functions as F
 
 from identity_matching_spark import config as config_mod
 from identity_matching_spark.config import MatchConfig
@@ -12,7 +14,7 @@ from identity_matching_spark.corpus import generate_files
 from identity_matching_spark.operators.blocking import candidate_pairs
 from identity_matching_spark.operators.compare import enrich_phonetic, jw_stem_table
 from identity_matching_spark.operators.normalize import normalize_files, with_dense_ids
-from identity_matching_spark.plans.pipeline import run_pipeline
+from identity_matching_spark.plans.pipeline import build_records, run_pipeline
 from identity_matching_spark.sources.snapshots import SnapshotStore
 
 PYTHON_NODES = ("ArrowEvalPython", "BatchEvalPython")
@@ -89,6 +91,45 @@ def test_distributed_paths_equal_driver_paths(spark, files, monkeypatch):
     d_bl, s_bl = _both_paths(monkeypatch, lambda: (
         lambda b: (_rows(b.pairs), _rows(b.block_stats)))(candidate_pairs(dense, cfg)))
     assert d_bl == s_bl and len(d_bl[0]) > 0
+
+    # the pipeline's records stage: one collect finishes the dense ids and
+    # the phonetic codes below the limit; above it the two distributed paths
+    def records():
+        recs, spent = build_records(files, cfg)
+        got = recs.select("didx", *phon_cols).collect()
+        for df in spent:
+            df.unpersist()
+        return recs.columns, sorted(tuple(r) for r in got)
+
+    d_rec, s_rec = _both_paths(monkeypatch, records)
+    assert d_rec == s_rec
+    assert d_rec[0] == enrich_phonetic(dense).columns
+    assert sorted(r[0] for r in d_rec[1]) == list(range(len(d_rec[1])))
+    assert [r[1:] for r in d_rec[1]] == sorted(d_ph)
+
+
+@pytest.mark.parametrize("durable", [False, True], ids=["memory", "durable"])
+@pytest.mark.parametrize("fuzzy", [False, True], ids=["exact", "fuzzy"])
+def test_source_rows_read_once(spark, files, tmp_path, fuzzy, durable):
+    """The normalize + validation-gate plan runs once per run: every row of
+    an uncached source passes a counting UDF exactly once, however many
+    consumers the records stage has before its barrier."""
+    src = str(tmp_path / "src")
+    files.write.parquet(src)
+    seen = spark.sparkContext.accumulator(0)
+
+    def count(content):
+        seen.add(1)
+        return content
+
+    counted = F.udf(count, "string").asNondeterministic()
+    source = spark.read.parquet(src).withColumn("content", counted("content"))
+    ckpt = str(tmp_path / "ckpt") if durable else None
+    res = run_pipeline(source, MatchConfig(enable_fuzzy=fuzzy), checkpoint_dir=ckpt)
+    res.clusters.count()
+    res.scored_pairs.count()
+    res.cleanup()
+    assert seen.value == files.count()
 
 
 def test_cache_handoff(spark, files, monkeypatch):
