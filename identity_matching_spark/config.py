@@ -25,11 +25,16 @@ DEFAULT_BLOCKING = (
     "minhash_lsh",   # MinHash band signatures over content shingles (near-dup family)
 )
 
-#: Driver finish (operators/driver_finish.py): a small relation is collected
-#: once, computed on the driver and handed back as a broadcast local
-#: relation instead of running as Spark jobs. Two limits, because the two
-#: kinds of driver work cost different amounts per row (crossovers measured
-#: at local[4] on 4 vCPUs, warm Spark session, median of 2 runs per path):
+#: Size policy: every choice between finishing a small relation on the
+#: driver, broadcasting a join side and shuffle-hashing it reads one of the
+#: limits below, at call time (operators/driver_finish.py: ``fits`` and
+#: ``join_side``), so tests can force either side of each choice.
+#:
+#: Driver finish: a small relation is collected once, computed on the
+#: driver and handed back as a broadcast local relation instead of running
+#: as Spark jobs. Two limits, because the two kinds of driver work cost
+#: different amounts per row (crossovers measured at local[4] on 4 vCPUs,
+#: warm Spark session, median of 2 runs per path):
 #:
 #: * DRIVER_FINISH_ROWS: relations computed row by row in pure Python —
 #:   the dense-id map (sort), the phonetic dictionaries (Cologne +
@@ -46,6 +51,38 @@ DEFAULT_BLOCKING = (
 #:   2M edges of long pairs are ~32 MB on the driver.
 DRIVER_FINISH_ROWS = 50_000
 DRIVER_FINISH_EDGES = 2_000_000
+
+#: Broadcast vs shuffle-hash, for relations of a known row count (an
+#: unknown count shuffle-hashes, never a hidden count job). The O(1)
+#: count-based choice is deterministic: AQE would only downgrade an
+#: exchange after the pair stream's map stage already ran.
+#:
+#: * BROADCAST_ROWS: every records-keyed join side — the (record_id, didx)
+#:   map that dense-id interning joins back (~72 B/row, ~70 MB at the
+#:   limit), blocking's (didx, record_id) re-attach, the scoring kernel's
+#:   attribute relation (~400 B/row of comparator attributes, ~400 MB at
+#:   the limit, inside one executor) and the JW table's (didx, stem) maps.
+#:   Broadcasting the attribute relation removes every pair-stream
+#:   exchange: serializing and compressing the wide pair x attrs rows was
+#:   ~40% of scoring task time at sf0.1. Above it the side shuffle-hashes
+#:   as the build relation: a sort-merge id join would SORT the wide
+#:   pair x attrs intermediate (~930 task-seconds at sf0.1, an external
+#:   sort spilling ~330 MB per task), while a shuffle-hash join only
+#:   shuffles it.
+#: * BROADCAST_STEM_PAIRS: the distinct unequal stem pair table
+#:   (Jaro-Winkler and Levenshtein values). 8M rows of (stem, stem,
+#:   double, double) are ~500 MB, inside a scoring executor, and far
+#:   cheaper than a full slim exchange of the pair stream against a
+#:   shuffled table.
+BROADCAST_ROWS = 1_000_000
+BROADCAST_STEM_PAIRS = 8_000_000
+
+#: Dense-id bucket width above the driver finish (normalize.with_dense_ids):
+#: one rank-window task sorts at most ~this many slim (record_id) rows, so
+#: the prefix width is ceil(log16(n / DENSE_ID_BUCKET_ROWS)) nibbles, at
+#: least 2. 4M ids x 72 B ≈ 300 MB per window partition, well inside an
+#: executor; the bucket count grows with the input instead.
+DENSE_ID_BUCKET_ROWS = 4_000_000
 
 
 @dataclass(frozen=True)
@@ -87,26 +124,6 @@ class MatchConfig:
     jaro_winkler_threshold: float = 0.92
     levenshtein_ratio_threshold: float = 0.85
     enable_fuzzy: bool = True
-    # Jaro-Winkler/Levenshtein are evaluated once per DISTINCT unequal stem
-    # pair (not per candidate pair) and joined back; below this row count
-    # the table is broadcast so the pair stream never shuffles for it.
-    # 8M rows ≈ 500 MB of (stem, stem, double, double) entries — inside a
-    # scoring executor's memory, and far cheaper than the alternative (a
-    # full slim exchange of the pair stream against a shuffled table).
-    jw_distinct_broadcast_limit: int = 8_000_000
-    # Records-side row count under which the scoring attaches BROADCAST
-    # the attribute relation (~400 B/row -> ~400 MB ceiling): the pair
-    # stream then never shuffles — scan -> broadcast probes -> flags ->
-    # partial agg in one codegen pass. Above it, slim shuffle-hash id
-    # joins (the plan an arbitrary-scale pair list needs).
-    records_broadcast_limit: int = 1_000_000
-    # Record ids are interned to dense longs (normalize.with_dense_ids)
-    # right after normalize; blocking, scoring and CC all key on them.
-    # Prefix-bucket width for the dense-id rank passes. None = auto-scale
-    # to the input (ceil(log16(n / 4M-row target)) — see
-    # normalize.with_dense_ids); an explicit width is honored verbatim
-    # (didx values are identical at every width — pytested).
-    dense_id_nibbles: int | None = None
     # --- input validation (P3-P6; IdentityMatching.java:519-560) ---
     # Records whose completeness tier ranks below this are dropped before
     # blocking: "NONE" | "BASE" | "L0" | "L1". The synthetic corpus is

@@ -52,7 +52,11 @@ from identity_matching_spark.functions.hashing import (
     word_shingles,
 )
 from identity_matching_spark.functions.normalize import hapi_norm
-from identity_matching_spark.operators.driver_finish import collect_small, local_relation
+from identity_matching_spark.operators.driver_finish import (
+    collect_small,
+    join_side,
+    local_relation,
+)
 
 # Families whose key alone implies a 0.99-grade match (strong identifiers).
 IDENTITY_FAMILIES = {"content_sha", "file_id"}
@@ -305,18 +309,11 @@ def candidate_pairs(
     )
     # ONE string-id re-attach after the dedup, from the slim (didx,
     # record_id) map — broadcast (a single ReusedExchange probed from both
-    # sides) when the map fits the budget, slim shuffle-hash joins
-    # otherwise. The didx twins ride on with the pair list: every scoring
+    # sides) when the map fits ``join_side``'s limit, slim shuffle-hash
+    # joins otherwise, and for an unknown ``n_records`` (never a hidden
+    # count job). The didx twins ride on with the pair list: every scoring
     # attach and the CC edge set key on them.
-    rel = records.select(F.col("didx").alias("_didx"), "record_id")
-    # Unknown records size -> slim shuffle-hash re-attach, never a hidden
-    # records.count() job inside plan construction: callers that hold the
-    # count (the pipeline's records stage) pass it and get the broadcast.
-    rel = (
-        F.broadcast(rel)
-        if n_records is not None and n_records <= config.records_broadcast_limit
-        else rel.hint("shuffle_hash")
-    )
+    rel = join_side(records.select(F.col("didx").alias("_didx"), "record_id"), n_records)
     lhs, rhs = rel.alias("_il"), rel.alias("_ir")
     pairs = (
         deduped

@@ -145,6 +145,12 @@ def connected_components(
 
     cluster_id = min record_id of the component. Nodes appearing only in
     no-edge isolation are the caller's concern (pipeline unions singletons).
+
+    When the star loop ends without a driver finish and no
+    ``checkpoint_dir`` is set, the result reads the last iteration's
+    local checkpoint lazily: it is handed to the caller as
+    ``cc_checkpoint`` (None otherwise), whose ``unpersist()`` drops its
+    blocks once the result has been materialized.
     """
     config = config or MatchConfig()
     ckpt = config.checkpoint_dir
@@ -179,12 +185,22 @@ def connected_components(
             df.write.mode("overwrite").parquet(path)
         return spark.read.parquet(path)
 
-    def _release(df: DataFrame) -> None:
+    def _checkpoint(df: DataFrame):
         # A local checkpoint's blocks outlive the run unless dropped:
         # DataFrame.unpersist only covers cache/persist, so reach the
-        # checkpointed RDD under the frame's LogicalRDD.
+        # checkpointed RDD under the frame's LogicalRDD (as a JavaRDD,
+        # whose unpersist() takes no argument).
+        return df._jdf.logicalPlan().rdd().toJavaRDD() if ckpt is None else None
+
+    def _release(df: DataFrame) -> None:
         if ckpt is None:
-            df._jdf.logicalPlan().rdd().unpersist(False)
+            _checkpoint(df).unpersist()
+
+    def _finish(df: DataFrame) -> DataFrame:
+        out = _finish_in_driver(df)
+        _release(df)
+        out.cc_checkpoint = None
+        return out
 
     done: list[int] = []
     manifest = os.path.join(ckpt, "cc_manifest.json") if ckpt is not None else None
@@ -230,9 +246,7 @@ def connected_components(
         with open(manifest, "w") as fh:
             _json.dump({"n": sig[0], "h": str(sig[1])}, fh)
     if fits(sig[0], edges=True):
-        out = _finish_in_driver(e)
-        _release(e)
-        return out
+        return _finish(e)
     for it in range(start_it, start_it + config.cc_max_iterations):
         e2 = _materialize(_small_star(_large_star(e)), it)
         sig2 = _sig(e2)  # computes every partition of e2: e is spent
@@ -245,15 +259,15 @@ def connected_components(
         sig = sig2
         if fits(sig[0], edges=True):
             # small enough: one collect replaces the remaining rounds
-            out = _finish_in_driver(e)
-            _release(e)
-            return out
+            return _finish(e)
     # After convergence every edge points node -> component min.
     members = e.select(F.col("src").alias("record_id"), F.col("dst").alias("cluster_id"))
     reps = e.select(F.col("dst").alias("record_id"), F.col("dst").alias("cluster_id"))
-    return members.unionByName(reps).groupBy("record_id").agg(
+    out = members.unionByName(reps).groupBy("record_id").agg(
         F.min("cluster_id").alias("cluster_id")
     )
+    out.cc_checkpoint = _checkpoint(e)
+    return out
 
 
 def clusters_with_singletons(

@@ -26,7 +26,12 @@ from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from identity_matching_spark.operators.driver_finish import collect_small, local_relation
+from identity_matching_spark.operators.driver_finish import (
+    broadcasts,
+    collect_small,
+    join_side,
+    local_relation,
+)
 
 # Columns each side of a pair needs for comparison. Every scalar is an
 # 8-byte long: identity attributes ride as h64 twins (see
@@ -63,37 +68,10 @@ def _eq(l: Column, r: Column) -> Column:
     return l.isNotNull() & r.isNotNull() & (l == r)
 
 
-#: records-side row count under which the attach joins BROADCAST the
-#: attribute relation instead of shuffling the pair stream. ~400 B/row of
-#: comparator attributes puts the default at ~400 MB — comfortably inside
-#: a single executor's memory while removing every pair-stream exchange
-#: (the dominant kernel cost: serializing + compressing the wide
-#: pair×attrs rows was ~40% of scoring task-time at sf0.1).
-RECORDS_BROADCAST_LIMIT = 1_000_000
-
-
-def _records_side(records_relation: DataFrame, n_records: int | None, limit: int):
-    """Broadcast the records side when it fits, else shuffle-hash; an
-    unknown size (None) shuffle-hashes, never a hidden count job.
-
-    The O(1) count-based choice is deterministic (same pattern as the JW
-    table): AQE would only downgrade the exchange after the pair stream's
-    map stage already ran. The shuffle-hash fallback matters at real
-    scale — a sort-merge id-join would SORT the wide pair×attrs
-    intermediate (measured ~930 task-seconds at sf0.1 — external sort
-    spill of ~330 MB/task); with the records side as the hashed build
-    relation the pair stream only shuffles, never sorts.
-    """
-    if n_records is not None and n_records <= limit:
-        return F.broadcast(records_relation)
-    return records_relation.hint("shuffle_hash")
-
-
 def attach_sides(
     pairs: DataFrame,
     records: DataFrame,
     n_records: int | None = None,
-    broadcast_limit: int = RECORDS_BROADCAST_LIMIT,
     cols: list[str] | None = None,
 ) -> DataFrame:
     """Join attributes onto both sides of the pair list, keyed on the dense
@@ -106,13 +84,14 @@ def attach_sides(
 
     Spark's LongHashedRelation turns the dense long key space into a
     direct-address array (LongToUnsafeRowMap dense mode): each probe is one
-    indexed load instead of a hash-bucket walk. Records relations of a
-    known ``n_records`` up to ``broadcast_limit`` broadcast (zero
-    pair-stream shuffles); large or uncounted ones shuffle-hash (two slim
-    exchanges keyed on 8-byte longs — unavoidable for arbitrary pair
-    lists). Either way ONE relation is probed from both sides: the two join
-    children are the same plan subtree (only the SubqueryAlias differs,
-    which canonicalization strips), so the second broadcast is planned as a
+    indexed load instead of a hash-bucket walk. The records side goes
+    through ``driver_finish.join_side``: a known ``n_records`` up to
+    ``config.BROADCAST_ROWS`` broadcasts (zero pair-stream shuffles);
+    large or uncounted ones shuffle-hash (two slim exchanges keyed on
+    8-byte longs — unavoidable for arbitrary pair lists). Either way ONE
+    relation is probed from both sides: the two join children are the
+    same plan subtree (only the SubqueryAlias differs, which
+    canonicalization strips), so the second broadcast is planned as a
     ReusedExchange — one build, one in-memory copy per executor. The
     broadcast relation is what the kernel hammers per pair, and a smaller
     resident set is the difference between L3 hits and DRAM misses at high
@@ -121,9 +100,7 @@ def attach_sides(
     (plan-asserted in test_fuzzy.py)."""
     cols = list(cols or ATTR_COLS)
     side_cols = [c for c in cols if c != "record_id"]
-    rel = _records_side(
-        records.select("didx", *side_cols), n_records, broadcast_limit
-    )
+    rel = join_side(records.select("didx", *side_cols), n_records)
     lhs, rhs = rel.alias("_atl"), rel.alias("_atr")
     return (
         pairs
@@ -183,11 +160,10 @@ def compare_pairs(
     pairs: DataFrame,
     records: DataFrame,
     n_records: int | None = None,
-    broadcast_limit: int = RECORDS_BROADCAST_LIMIT,
 ) -> DataFrame:
     """pairs(left_id, right_id, left_didx, right_didx) -> the pair columns
     plus one bool col per flag."""
-    attached = attach_sides(pairs, records, n_records, broadcast_limit)
+    attached = attach_sides(pairs, records, n_records)
     flags = comparator_flags()
     return attached.select(
         *pairs.columns,
@@ -249,16 +225,6 @@ PHONETIC_COLS = ["cologne_dir1", "soundex_stem", "metaphone_stem"]
 PHONETIC_H64_COLS = ["cologne_h64", "soundex_h64", "metaphone_h64"]
 
 
-def _phonetic_twins(df: DataFrame) -> DataFrame:
-    return df.select(
-        "*",
-        *[
-            F.when(F.col(s).isNotNull(), F.xxhash64(F.col(s))).alias(h)
-            for s, h in zip(PHONETIC_COLS, PHONETIC_H64_COLS)
-        ],
-    )
-
-
 def phonetic_keys() -> list[Column]:
     """The normalized values the phonetic codes are taken of: ``_nd1``
     (the given-name analog ``dir1``) and ``_nst`` (the family-name analog
@@ -287,8 +253,13 @@ def with_soundex_twins(records: DataFrame) -> DataFrame:
     three h64 twins, appended in that order."""
     from identity_matching_spark.functions.normalize import hapi_norm
 
-    return _phonetic_twins(
-        records.withColumn("soundex_stem", F.soundex(hapi_norm(F.col("stem"))))
+    out = records.withColumn("soundex_stem", F.soundex(hapi_norm(F.col("stem"))))
+    return out.select(
+        "*",
+        *[
+            F.when(F.col(c).isNotNull(), F.xxhash64(F.col(c))).alias(h)
+            for c, h in zip(PHONETIC_COLS, PHONETIC_H64_COLS)
+        ],
     )
 
 
@@ -357,7 +328,6 @@ def jw_stem_table(
     pairs: DataFrame,
     records: DataFrame,
     n_records: int | None = None,
-    broadcast_limit: int = RECORDS_BROADCAST_LIMIT,
 ) -> DataFrame:
     """Jaro-Winkler + Levenshtein-ratio per DISTINCT unequal stem pair —
     not per candidate pair.
@@ -387,8 +357,9 @@ def jw_stem_table(
     and Levenshtein-ratio are both symmetric, so one orientation serves
     both — halving the distinct set, the partial-agg hash maps, the
     Jaro-Winkler calls, and the broadcast that ships the values back.
-    Probe sides canonicalize the same way. ``n_records`` None (unknown)
-    joins the stem maps shuffle-hash.
+    Probe sides canonicalize the same way. The (didx, stem) maps join
+    through ``driver_finish.join_side`` on ``n_records`` (None, unknown,
+    shuffle-hashes them).
     """
     from identity_matching_spark.functions.similarity import (
         jaro_winkler,
@@ -398,9 +369,9 @@ def jw_stem_table(
     # stem maps keyed on didx: probes hit the dense long hash relation, no
     # id-string hashing on this scan
     l, r = (
-        _records_side(
+        join_side(
             records.select(F.col("didx").alias(f"{side}_didx"), F.col("stem").alias(stem)),
-            n_records, broadcast_limit,
+            n_records,
         )
         for side, stem in (("left", "_sl"), ("right", "_sr"))
     )
@@ -483,30 +454,16 @@ def compare_pairs_fuzzy(
     # Enrich only if the caller didn't already (pipelines enrich once at
     # normalize time — keeps this join side a plain relation, so Catalyst
     # can broadcast it when small instead of shuffling the huge pair list).
-    if "cologne_h64" in records.columns:
-        enriched = records
-    elif "cologne_dir1" in records.columns:
-        # phonetic codes present but not their twins (e.g. a relation
-        # persisted before the all-long probe schema): derive twins only
-        enriched = _phonetic_twins(records)
-    else:
-        enriched = enrich_phonetic(records)
+    # Every producer of the codes also adds their h64 twins.
+    enriched = records if "cologne_h64" in records.columns else enrich_phonetic(records)
     cols = ATTR_COLS + PHONETIC_H64_COLS
-    limit = config.records_broadcast_limit
-    # Two known sizes drive every join choice below (same pattern as the
-    # CC convergence check) — AQE would only downgrade an exchange after
-    # the pair stream's map stage already ran. The JW table carries its
-    # row count, driver-finished or persisted and counted.
-    jwtab = jw_stem_table(
-        jw_pairs if jw_pairs is not None else pairs, enriched, n_records, limit
-    )
+    # Two known sizes drive every join choice below, through
+    # driver_finish.join_side. The JW table carries its row count,
+    # driver-finished or persisted and counted.
+    jwtab = jw_stem_table(jw_pairs if jw_pairs is not None else pairs, enriched, n_records)
     n_jw = jwtab.n_rows
 
-    if (
-        n_records is not None
-        and n_records <= limit
-        and n_jw <= config.jw_distinct_broadcast_limit
-    ):
+    if broadcasts(n_records) and broadcasts(n_jw, stem_pairs=True):
         # Broadcast regime: the whole kernel is ONE codegen pass over the
         # pair stream — scan -> 3 broadcast probes -> flags -> partial
         # agg, zero pair-stream exchanges. Attach attrs FIRST (the stem
@@ -517,13 +474,16 @@ def compare_pairs_fuzzy(
         # entirely; the (jh_lo, jh_hi) equality on hash hits pins the
         # match to the same 2^-64 h64 equality class the C3 comparator
         # itself uses — no strings ride the probe rows at all.
-        attached_aw = attach_sides(pairs, enriched, n_records, limit, cols=cols)
-        jwb = F.broadcast(jwtab.select(
-            F.xxhash64("jh_lo", "jh_hi").alias("_jk"),
-            "jh_lo", "jh_hi",
-            "jw_stem_val",
-            "lev_stem_val",
-        ))
+        attached_aw = attach_sides(pairs, enriched, n_records, cols=cols)
+        jwb = join_side(
+            jwtab.select(
+                F.xxhash64("jh_lo", "jh_hi").alias("_jk"),
+                "jh_lo", "jh_hi",
+                "jw_stem_val",
+                "lev_stem_val",
+            ),
+            n_jw, stem_pairs=True,
+        )
         # canonical hash-ordered orientation — the table stores each
         # unordered stem pair once (JW/lev are symmetric)
         cl = F.least("l_stem_h64", "r_stem_h64")
@@ -553,25 +513,21 @@ def compare_pairs_fuzzy(
         # sides' attrs incl. line-hash arrays, ~0.5-1 KB/pair) by stem pair
         # costs an order more bytes than shuffling (ids, stems).
         sl, sr = (
-            _records_side(
+            join_side(
                 enriched.select(F.col("didx").alias(f"{side}_didx"), F.col("stem").alias(stem)),
-                n_records, limit,
+                n_records,
             )
             for side, stem in (("left", "_jl"), ("right", "_jr"))
         )
         pairs_stems = pairs.join(sl, "left_didx").join(sr, "right_didx")
-        jw_side = (
-            F.broadcast(jwtab)
-            if n_jw <= config.jw_distinct_broadcast_limit
-            else jwtab.hint("shuffle_hash")
-        )
+        jw_side = join_side(jwtab, n_jw, stem_pairs=True)
         pairs_jw = pairs_stems.join(
             jw_side,
             (F.least("_jl", "_jr") == jw_side["l_stem"])
             & (F.greatest("_jl", "_jr") == jw_side["r_stem"]),
             "left",
         ).select(*pairs.columns, "jw_stem_val", "lev_stem_val")
-        attached = attach_sides(pairs_jw, enriched, n_records, limit, cols=cols)
+        attached = attach_sides(pairs_jw, enriched, n_records, cols=cols)
     flags = comparator_flags()
     # same equality class as the C3 family comparator (stem_h64 twins)
     stems_equal = _eq(F.col("l_stem_h64"), F.col("r_stem_h64"))

@@ -1,4 +1,4 @@
-"""Driver finish for small relations.
+"""The size policy: driver finish, broadcast or shuffle-hash.
 
 Several relations on the linkage path are tiny next to the record and pair
 streams: the dense-id map, the phonetic dictionaries, the distinct-stem
@@ -13,12 +13,19 @@ which the consumers broadcast. The dense-id map and the phonetic
 dictionaries of the pipeline's records stage share one collect
 (``normalize.with_dense_ids(phonetic=True)``) and one local relation.
 Above the limit the callers keep their distributed plans.
+
+Every join side whose size decides its plan goes through ``join_side``:
+broadcast up to ``config.BROADCAST_ROWS`` rows (records-keyed relations)
+or ``config.BROADCAST_STEM_PAIRS`` (the distinct-stem JW table),
+shuffle-hash above it or when the size is unknown. Every limit is read at
+call time.
 """
 
 from __future__ import annotations
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from identity_matching_spark import config
@@ -28,6 +35,20 @@ def fits(n_rows: int, edges: bool = False) -> bool:
     """Whether a relation of ``n_rows`` rows (CC edges when ``edges``) is
     finished on the driver."""
     return n_rows <= (config.DRIVER_FINISH_EDGES if edges else config.DRIVER_FINISH_ROWS)
+
+
+def broadcasts(n_rows: int | None, stem_pairs: bool = False) -> bool:
+    """Whether a join side of ``n_rows`` rows (distinct stem pairs when
+    ``stem_pairs``) is broadcast. An unknown size (None) is not: the
+    callers never run a count job to learn it."""
+    limit = config.BROADCAST_STEM_PAIRS if stem_pairs else config.BROADCAST_ROWS
+    return n_rows is not None and n_rows <= limit
+
+
+def join_side(df: DataFrame, n_rows: int | None, stem_pairs: bool = False) -> DataFrame:
+    """``df`` hinted as a join's build side: broadcast when ``broadcasts``,
+    else shuffle-hash, so the other side is shuffled but never sorted."""
+    return F.broadcast(df) if broadcasts(n_rows, stem_pairs) else df.hint("shuffle_hash")
 
 
 def persist_owned(df: DataFrame) -> DataFrame | None:

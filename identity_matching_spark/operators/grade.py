@@ -111,23 +111,19 @@ def mdm_phonetic_verdict_expr() -> Column:
     )
 
 
-def grade_pairs(flagged: DataFrame, with_messages: bool = False) -> DataFrame:
+def grade_pairs(flagged: DataFrame) -> DataFrame:
     """Attach score / weight / verdict to a comparator-flag DataFrame.
 
-    ``with_messages=True`` adds the A3 ``match_messages array<string>``
-    column (the pipeline output carries it; the driver's scored_pairs
-    oracle query keeps the scalar-only schema and checks messages via the
-    exploded ``match_messages`` query instead)."""
-    from identity_matching_spark.operators.compare import match_messages_expr
-
-    cols = [
+    The A3 ``match_messages`` column is not added here: the pipeline
+    derives it over the slim graded relation
+    (``plans.pipeline.with_match_messages``), and the driver's
+    scored_pairs oracle query keeps the scalar-only schema."""
+    out = flagged.select(
+        "*",
         grade_expr().alias("score"),
         weight_expr().alias("weight"),
         mdm_verdict_expr().alias("verdict"),
-    ]
-    if with_messages:
-        cols.append(match_messages_expr().alias("match_messages"))
-    out = flagged.select("*", *cols)
+    )
     if "cologne_given_match" in flagged.columns:
         out = out.withColumn("verdict_phonetic", mdm_phonetic_verdict_expr())
     return out

@@ -41,9 +41,14 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from identity_matching_spark import config
 from identity_matching_spark.functions.hashing import hash64_sha, sha256_hex
 from identity_matching_spark.functions.normalize import norm_ws
-from identity_matching_spark.operators.driver_finish import collect_small, local_relation
+from identity_matching_spark.operators.driver_finish import (
+    collect_small,
+    join_side,
+    local_relation,
+)
 
 SEP = ""  # unit separator for composite keys (chr(31) in SQL)
 
@@ -84,31 +89,14 @@ H64_PAIRS = [
 ]
 
 
-#: id-map row count under which the didx join-back BROADCASTS the slim
-#: (record_id, didx) map (~72 B/row -> ~70 MB at the default) so the wide
-#: records relation never shuffles; above it the map shuffle-hash joins.
-DENSE_ID_BROADCAST_LIMIT = 1_000_000
-
-#: auto-scale target: one rank-window task sorts at most ~this many slim
-#: (record_id) rows. 4M ids x 72 B ≈ 300 MB per window partition — well
-#: inside an executor; the bucket count grows with the input instead.
-DENSE_ID_TARGET_BUCKET_ROWS = 4_000_000
-
-
-def with_dense_ids(
-    records: DataFrame,
-    prefix_nibbles: int | None = None,
-    broadcast_limit: int = DENSE_ID_BROADCAST_LIMIT,
-    target_bucket_rows: int = DENSE_ID_TARGET_BUCKET_ROWS,
-    phonetic: bool = False,
-) -> DataFrame:
+def with_dense_ids(records: DataFrame, phonetic: bool = False) -> DataFrame:
     """Intern record ids to DENSE longs: ``didx`` = rank of record_id.
 
     Downstream joins keyed on didx hit Spark's LongHashedRelation dense
     mode (direct-address array, one indexed load per probe) instead of a
     sparse hash walk — the single biggest lever on the scoring kernel's
     probe memory traffic. Deterministic: same records -> same didx, on
-    either path below and for every ``prefix_nibbles`` width (pytested in
+    either path below and at every bucket width (pytested in
     test_attach_dense.py).
 
     Driver finish (at most ``config.DRIVER_FINISH_ROWS`` ids): one collect
@@ -139,22 +127,22 @@ def with_dense_ids(
     pass, and a non-deterministic source must not let the offset pass
     disagree with the rank pass — ADVICE r4):
 
-    1. count rows per ``16^prefix_nibbles`` order-preserving prefix
-       buckets (one map-side-combined groupBy -> O(buckets) rows to the
-       driver), prefix offsets = exclusive cumsum;
+    1. count rows per ``16^nibbles`` order-preserving prefix buckets (one
+       map-side-combined groupBy -> O(buckets) rows to the driver),
+       prefix offsets = exclusive cumsum;
     2. rank WITHIN each bucket (hash-partitioned window, never
        SinglePartition); didx = bucket offset + local rank.
 
-    ``prefix_nibbles=None`` (default) auto-scales the width to the input:
-    ceil(log16(n / target_bucket_rows)) nibbles, so no rank window ever
-    sees a multi-billion-row partition — 2 nibbles (256 buckets) up to
-    ~10^9 ids, 5 nibbles (~1M buckets, ~1M-row driver collect) at 10^12.
-    An explicit width is honored verbatim (tests force 4 to prove didx
-    equality across widths).
+    The width scales with the input: ceil(log16(n /
+    ``config.DENSE_ID_BUCKET_ROWS``)) nibbles, at least 2, so no rank
+    window ever sees a multi-billion-row partition — 2 nibbles (256
+    buckets) up to ~10^9 ids, 5 nibbles (~1M buckets, ~1M-row driver
+    collect) at 10^12.
 
-    The id->didx map then joins back: broadcast below ``broadcast_limit``
-    (the wide records relation never moves), shuffle-hash above it (two
-    slim exchanges — the unavoidable arbitrary-scale plan). The persisted
+    The id->didx map then joins back through ``driver_finish.join_side``:
+    broadcast up to ``config.BROADCAST_ROWS`` ids (the wide records
+    relation never moves), shuffle-hash above it (two slim exchanges —
+    the unavoidable arbitrary-scale plan). The persisted
     slim projection is handed to the caller on the result as
     ``_dense_slim_cache`` — the id map keeps reading it lazily, so it
     stays pinned until the pipeline's records barrier has read it.
@@ -189,11 +177,12 @@ def with_dense_ids(
     def _bucket(nib: int):
         return F.conv(F.substring("record_id", 1, nib), 16, 10).cast("long")
 
-    nib = prefix_nibbles or 2
+    nib = 2
     counts = slim.groupBy(_bucket(nib).alias("_bkt")).count().collect()
     total = sum(int(r["count"]) for r in counts)
-    if prefix_nibbles is None and total > target_bucket_rows:
-        need = max(2, math.ceil(math.log(total / target_bucket_rows, 16)))
+    target = config.DENSE_ID_BUCKET_ROWS
+    if total > target:
+        need = max(2, math.ceil(math.log(total / target, 16)))
         if need > nib:  # re-count at the wider prefix (persisted slim scan)
             nib = need
             counts = slim.groupBy(_bucket(nib).alias("_bkt")).count().collect()
@@ -211,11 +200,7 @@ def with_dense_ids(
             (F.col("_off") + F.row_number().over(w) - F.lit(1)).cast("long").alias("didx"),
         )
     )
-    if acc <= broadcast_limit:
-        idmap = F.broadcast(idmap)
-    else:
-        idmap = idmap.hint("shuffle_hash")
-    out = records.join(idmap, "record_id")
+    out = records.join(join_side(idmap, acc), "record_id")
     out._dense_slim_cache = slim_cache
     return out
 

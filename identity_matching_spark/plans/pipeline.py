@@ -75,7 +75,9 @@ class PipelineResult:
         barriers (records, scored pairs, and pairs when fuzzy), blocking's
         key table and, only above ``config.DRIVER_FINISH_ROWS``, blocking's
         guard key set and the distinct-stem JW table (their
-        driver-finished forms are local relations and pin nothing). The
+        driver-finished forms are local relations and pin nothing), and
+        connected components' last local checkpoint when its star loop
+        ended above ``config.DRIVER_FINISH_EDGES``. The
         records stage's own caches are already gone: they are released at
         its barrier. Call after the outputs have been materialized;
         long-lived sessions otherwise accumulate cached blocks across
@@ -87,9 +89,8 @@ class PipelineResult:
 
 def with_match_messages(scored_slim: DataFrame) -> DataFrame:
     """Insert the A3 ``match_messages`` column into a slim scored relation
-    at the same position ``grade_pairs(..., with_messages=True)`` emits it
-    (after ``verdict``, before ``verdict_phonetic``) so the two shapes are
-    schema-identical."""
+    (``grade_pairs``' output), right after ``verdict`` and before
+    ``verdict_phonetic``: the pipeline's ``scored_pairs`` schema."""
     from identity_matching_spark.operators.compare import match_messages_expr
 
     cols: list = []
@@ -107,12 +108,13 @@ class _Stages:
         self.store = SnapshotStore(spark, checkpoint_dir) if checkpoint_dir else None
         self.resume = resume
         self.rows: dict[str, int | None] = {}  # rows_out per stage, when known
-        self.pinned: list[DataFrame] = []  # released by PipelineResult.cleanup
+        # caches (anything with unpersist()) released by PipelineResult.cleanup
+        self.pinned: list = []
         # caches only the stage being built reads: released as soon as its
         # barrier count or snapshot write has read them
         self.spent: list[DataFrame] = []
 
-    def pin(self, df: DataFrame | None) -> None:
+    def pin(self, df) -> None:
         if df is not None:
             self.pinned.append(df)
 
@@ -191,9 +193,7 @@ def build_records(files: DataFrame, config: MatchConfig) -> tuple[DataFrame, lis
     gated_cache = persist_owned(gated)
     # Dense-id interning (broadcast join-back either way): every later
     # join keys on direct-address long maps instead of 64-char sha strings.
-    records = with_dense_ids(
-        gated, prefix_nibbles=config.dense_id_nibbles, phonetic=config.enable_fuzzy
-    )
+    records = with_dense_ids(gated, phonetic=config.enable_fuzzy)
     spent = [gated_cache, getattr(records, "_dense_slim_cache", None)]
     if config.enable_fuzzy and "cologne_dir1" not in records.columns:
         from identity_matching_spark.operators.compare import enrich_phonetic
@@ -249,16 +249,14 @@ def run_pipeline(
             )
             st.pin(flagged.jw_stem_cache)
         else:
-            flagged = compare_pairs(
-                pairs, records, st.rows["records"], config.records_broadcast_limit
-            )
+            flagged = compare_pairs(pairs, records, st.rows["records"])
         # The SLIM scored relation (flags + score/weight/verdicts + didx
         # twins) is what gets cached or stored; match_messages is a lazy
         # projection over it. The message array is a pure function of the
         # flag columns, so caching it would serialize ~0.5 KB of strings
         # per pair for data any consumer can recompute in-stream (measured
         # at sf0.1/local[16]: persist+count 105 s with messages vs 13 s).
-        return grade_pairs(flagged, with_messages=False)
+        return grade_pairs(flagged)
 
     scored = st.run("scored_pairs", build_scored)
     cc_dir = os.path.join(checkpoint_dir, "cc") if checkpoint_dir else None
@@ -284,6 +282,7 @@ def run_pipeline(
             ),
             config.with_(checkpoint_dir=cc_dir) if cc_dir else config,
         )
+        st.pin(assignments.cc_checkpoint)
         return clusters_with_singletons(records, assignments, key="didx")
 
     clusters = st.run("clusters", build_clusters, barrier=False)

@@ -71,9 +71,10 @@ def incremental_score(
     """Score only the delta pairs — the event-driven MDM re-link analog.
 
     ``n_records``: the row count of ``all_records`` when the caller holds
-    it; up to ``config.records_broadcast_limit`` the records side is then
-    broadcast. None (unknown) shuffle-hashes it rather than counting."""
+    it; up to the ``BROADCAST_ROWS`` limit in ``identity_matching_spark.config``
+    the records side is then broadcast. None (unknown) shuffle-hashes it
+    rather than counting."""
     pairs = incremental_pairs(all_records, new_records, config)
-    return grade_pairs(
-        compare_pairs(pairs, all_records, n_records, config.records_broadcast_limit)
-    ).drop("left_didx", "right_didx")
+    return grade_pairs(compare_pairs(pairs, all_records, n_records)).drop(
+        "left_didx", "right_didx"
+    )

@@ -2,6 +2,8 @@
 width-independent, and blocking emits them as the pair key. Scored rows
 over didx keys are checked against DuckDB in test_oracle_parity.py."""
 
+import re
+
 import pytest
 
 from identity_matching_spark import config as config_mod
@@ -17,6 +19,12 @@ def bucket_ranks(monkeypatch):
 
 def _rows(df):
     return sorted(tuple(r) for r in df.collect())
+
+
+def _width(df) -> int:
+    """The record_id prefix width (nibbles) of df's bucket-rank plan."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return int(re.search(r"substring\(record_id#\d+, 1, (\d+)\)", plan).group(1))
 
 
 def test_dense_ids_are_dense_and_deterministic(spark):
@@ -70,11 +78,12 @@ def test_with_dense_ids_scales_without_global_window(spark, bucket_ranks):
     assert "SinglePartition" not in plan
 
 
-def test_dense_ids_identical_across_nibble_widths(spark, bucket_ranks):
-    """didx must be bit-identical at every prefix_nibbles width (VERDICT r4
-    #3): the bucket scheme re-partitions the rank computation but never
-    reorders it, so a forced-4-nibble run (the 10^12-id shape) assigns the
-    same ids as the 2-nibble default."""
+def test_dense_ids_identical_across_nibble_widths(spark, bucket_ranks, monkeypatch):
+    """didx must be bit-identical at every prefix width (VERDICT r4 #3):
+    the bucket scheme re-partitions the rank computation but never reorders
+    it, so a forced-4-nibble run (the 10^12-id shape) assigns the same ids
+    as the 2-nibble default. A fractional config.DENSE_ID_BUCKET_ROWS
+    forces the width on 64 ids: ceil(log16(64 / target)) nibbles."""
     files = spark.createDataFrame(
         [(f"r{i}", f"src/m{i % 5}/f{i}.py", "c" * 40, "python", f"body {i}")
          for i in range(64)],
@@ -82,8 +91,10 @@ def test_dense_ids_identical_across_nibble_widths(spark, bucket_ranks):
     )
     recs = normalize_files(files)
     by_width = {}
-    for nib in (2, 4, 6):
-        got = with_dense_ids(recs, prefix_nibbles=nib)
+    for nib, target in ((2, config_mod.DENSE_ID_BUCKET_ROWS), (4, 0.01), (6, 1e-5)):
+        monkeypatch.setattr(config_mod, "DENSE_ID_BUCKET_ROWS", target)
+        got = with_dense_ids(recs)
+        assert _width(got) == nib
         by_width[nib] = sorted(
             (r["record_id"], r["didx"])
             for r in got.select("record_id", "didx").collect()
@@ -92,27 +103,29 @@ def test_dense_ids_identical_across_nibble_widths(spark, bucket_ranks):
     assert sorted(d for _, d in by_width[2]) == list(range(64))
 
 
-def test_dense_ids_autoscale_width(spark, bucket_ranks):
-    """prefix_nibbles=None derives the width from the input: tiny inputs
-    stay at 2 nibbles; a small target_bucket_rows forces a wider prefix,
-    with identical didx values either way."""
+def test_dense_ids_autoscale_width(spark, bucket_ranks, monkeypatch):
+    """The width derives from the input: tiny inputs stay at 2 nibbles; a
+    small config.DENSE_ID_BUCKET_ROWS forces a wider prefix, with identical
+    didx values either way."""
     files = spark.createDataFrame(
         [(f"r{i}", f"f{i}.py", "c" * 40, "python", f"body {i}") for i in range(32)],
         ["repo", "path", "commit", "lang", "content"],
     )
     recs = normalize_files(files)
-    auto = with_dense_ids(recs, target_bucket_rows=4)  # forces ceil(log16(8))=2.. wider path
-    default = with_dense_ids(recs, prefix_nibbles=2)
+    default = with_dense_ids(recs)
+    monkeypatch.setattr(config_mod, "DENSE_ID_BUCKET_ROWS", 0.01)
+    auto = with_dense_ids(recs)  # ceil(log16(32 / 0.01)) = 3 nibbles
+    assert (_width(default), _width(auto)) == (2, 3)
     rows = lambda df: sorted(
         (r["record_id"], r["didx"]) for r in df.select("record_id", "didx").collect()
     )
     assert rows(auto) == rows(default)
 
 
-def test_pipeline_forced_4_nibbles_identical(spark, bucket_ranks, sf_dir):
-    """run_pipeline with dense_id_nibbles=4 must yield bit-identical
-    candidate pairs and clusters to the auto-width run (VERDICT r4 #3
-    done-criterion)."""
+def test_pipeline_forced_4_nibbles_identical(spark, bucket_ranks, sf_dir, monkeypatch):
+    """run_pipeline with a 4-nibble dense-id width must yield
+    bit-identical candidate pairs and clusters to the default-width run
+    (VERDICT r4 #3 done-criterion)."""
     from identity_matching_spark.config import MatchConfig
     from identity_matching_spark.plans.pipeline import run_pipeline
     from identity_matching_spark.sources.tables import (
@@ -122,9 +135,10 @@ def test_pipeline_forced_4_nibbles_identical(spark, bucket_ranks, sf_dir):
 
     corpus_files = files_from_documents(load_table(spark, sf_dir, "documents"))
     base = run_pipeline(corpus_files, MatchConfig(enable_fuzzy=False))
-    forced = run_pipeline(
-        corpus_files, MatchConfig(enable_fuzzy=False, dense_id_nibbles=4)
-    )
+    # ceil(log16(n / 0.01)) = 4 nibbles for any 41 < n <= 655 records
+    assert 41 < base.records.count() <= 655
+    monkeypatch.setattr(config_mod, "DENSE_ID_BUCKET_ROWS", 0.01)
+    forced = run_pipeline(corpus_files, MatchConfig(enable_fuzzy=False))
     assert _rows(base.pairs.select("left_id", "right_id")) == _rows(
         forced.pairs.select("left_id", "right_id")
     )

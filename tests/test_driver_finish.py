@@ -85,7 +85,7 @@ def test_distributed_paths_equal_driver_paths(spark, files, monkeypatch):
     pairs = candidate_pairs(dense, cfg).pairs.cache()
     n = dense.count()
     d_jw, s_jw = _both_paths(monkeypatch, lambda: _rows(
-        jw_stem_table(pairs, dense, n, cfg.records_broadcast_limit)))
+        jw_stem_table(pairs, dense, n)))
     assert d_jw == s_jw and len(d_jw) > 0
 
     d_bl, s_bl = _both_paths(monkeypatch, lambda: (
@@ -167,30 +167,36 @@ def test_cache_handoff(spark, files, monkeypatch):
         df.unpersist()
 
 
-@pytest.mark.parametrize("limit", [None, 0], ids=["driver", "distributed"])
-def test_cleanup_releases_run_caches(spark, files, monkeypatch, limit):
+@pytest.mark.parametrize("case", ["driver", "distributed", "star-loop"])
+def test_cleanup_releases_run_caches(spark, files, monkeypatch, case):
     """An in-memory run plus cleanup() leaves the session's persisted RDDs
-    as it found them: blocking's key table and, with the limit at 0, its
-    cached guard key set are pinned with the run's other caches, and CC's
-    local checkpoint is dropped once the driver finish has collected it."""
-    if limit is not None:
-        monkeypatch.setattr(config_mod, "DRIVER_FINISH_ROWS", limit)
+    as it found them: blocking's key table and, with DRIVER_FINISH_ROWS at
+    0, its cached guard key set are pinned with the run's other caches, and
+    CC's local checkpoint is dropped once the driver finish has collected
+    it or, with DRIVER_FINISH_EDGES at 0 (the star loop runs to
+    convergence), by cleanup()."""
     files.count()  # the module fixture's own cache is not the run's
 
     def persisted():
         return spark.sparkContext._jsc.getPersistentRDDs().size()
 
+    # exact-only below: the fuzzy caches' release is covered by
+    # test_cache_handoff, and their pandas UDFs would triple the run.
     cfg = MatchConfig()
-    if limit is not None:
-        # exact-only: the fuzzy caches' release is covered by
-        # test_cache_handoff, and their pandas UDFs would triple the run.
+    if case == "distributed":
+        monkeypatch.setattr(config_mod, "DRIVER_FINISH_ROWS", 0)
         # Small block caps give the guard set rows, so it is cached.
         cfg = cfg.with_(enable_fuzzy=False, max_block_size=4, identity_star_threshold=2)
+    elif case == "star-loop":
+        monkeypatch.setattr(config_mod, "DRIVER_FINISH_EDGES", 0)
+        cfg = cfg.with_(enable_fuzzy=False)
 
     before = persisted()
     res = run_pipeline(files, cfg)
-    if limit is not None:
+    if case == "distributed":
         assert res.block_stats.count() > 0
+    if case == "star-loop":  # edges, so the loop ran instead of the finish
+        assert res.edges.count() > 0
     res.cleanup()
     assert persisted() == before
 

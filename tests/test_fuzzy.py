@@ -2,9 +2,10 @@
 phonetic verdict (mdm-rules.json semantics)."""
 
 import pytest
-from pyspark.sql import functions as F
 
+from identity_matching_spark import config as config_mod
 from identity_matching_spark.config import MatchConfig
+from identity_matching_spark.operators.blocking import candidate_pairs
 from identity_matching_spark.operators.compare import (
     FUZZY_FLAG_NAMES,
     compare_pairs,
@@ -102,7 +103,7 @@ def test_enrich_phonetic_columns(spark):
 
 
 def test_kernel_plan_is_shuffle_free_in_broadcast_regime(spark):
-    """With the records side under records_broadcast_limit, the scoring
+    """With the records side under config.BROADCAST_ROWS, the scoring
     kernel must be one broadcast-probe pipeline over the pair stream:
     no sort-merge or shuffled-hash join anywhere in the scored plan."""
     rows = [
@@ -118,33 +119,58 @@ def test_kernel_plan_is_shuffle_free_in_broadcast_regime(spark):
     assert plan.count("BroadcastHashJoin") >= 4  # stems x2, jw table, attrs x2
 
 
-def test_shuffle_hash_regime_equals_broadcast_regime(spark):
-    """With both broadcast limits at 0 the attaches, the stem maps and the
-    JW table join shuffle-hash on the didx keys; every scored row must equal
-    the broadcast regime's."""
-    recs = _recs(spark, [
+def test_shuffle_hash_regime_equals_broadcast_regime(spark, monkeypatch):
+    """With both broadcast limits (config.BROADCAST_ROWS and
+    BROADCAST_STEM_PAIRS) at 0 the attaches, the stem maps, the JW table,
+    with_dense_ids' id map and blocking's string-id re-attach join
+    shuffle-hash on their keys; every row must equal the broadcast
+    regime's."""
+    files = spark.createDataFrame([
         ("r1", "src/io/smith.py", "a" * 40, "python", "alpha beta gamma"),
         ("r2", "src/io/smyth.py", "b" * 40, "python", "alpha beta gamma delta"),
         ("r3", "lib/db/runner.py", "c" * 40, "go", "totally different content here"),
         ("r4", "src/io/smith.py", "d" * 40, "python", "alpha beta gamma"),
         ("r5", "src/db/smithe.py", "e" * 40, "python", "alpha"),
-    ])
+    ], ["repo", "path", "commit", "lang", "content"])
+    recs = with_dense_ids(normalize_files(files))
     ids = sorted(r["record_id"] for r in recs.select("record_id").collect())
     pairs = _pairs(spark, recs, [(a, b) for i, a in enumerate(ids) for b in ids[i + 1:]])
-    shuffled = CFG.with_(records_broadcast_limit=0, jw_distinct_broadcast_limit=0)
     rows = lambda df: sorted(tuple(r) for r in df.collect())  # noqa: E731
+    plan = lambda df: df._jdf.queryExecution().executedPlan().toString()  # noqa: E731
 
-    exact_b = compare_pairs(pairs, recs, n_records=5)
-    exact_s = compare_pairs(pairs, recs, n_records=5, broadcast_limit=0)
-    plan = exact_s._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("ShuffledHashJoin") >= 2  # both attach sides
+    def both(build):
+        """build() under the default limits, then with both at 0."""
+        broadcast = build()
+        with monkeypatch.context() as m:
+            m.setattr(config_mod, "BROADCAST_ROWS", 0)
+            m.setattr(config_mod, "BROADCAST_STEM_PAIRS", 0)
+            shuffled = build()
+        return broadcast, shuffled
+
+    # the id joins: the dense-id map on its distributed (bucket-rank) path,
+    # and blocking's re-attach of the string ids after the pair dedup
+    with monkeypatch.context() as m:
+        m.setattr(config_mod, "DRIVER_FINISH_ROWS", 0)
+        ids_b, ids_s = both(lambda: with_dense_ids(normalize_files(files)))
+    assert "ShuffledHashJoin" not in plan(ids_b)
+    assert "ShuffledHashJoin" in plan(ids_s)
+    id_cols = lambda df: df.select("record_id", "didx", "stem")  # noqa: E731
+    assert rows(id_cols(ids_s)) == rows(id_cols(ids_b)) == rows(id_cols(recs))
+    block_b, block_s = both(lambda: candidate_pairs(recs, CFG, n_records=5))
+    assert "ShuffledHashJoin" not in plan(block_b.pairs)
+    assert plan(block_s.pairs).count("ShuffledHashJoin") >= 2  # both id sides
+    assert rows(block_s.pairs) == rows(block_b.pairs) and len(rows(block_b.pairs)) > 0
+    # the second dense-id build found the first one's slim cache (None)
+    for cache in (ids_b._dense_slim_cache, block_b.keyed_cache, block_s.keyed_cache):
+        cache.unpersist()
+
+    exact_b, exact_s = both(lambda: compare_pairs(pairs, recs, n_records=5))
+    assert plan(exact_s).count("ShuffledHashJoin") >= 2  # both attach sides
     assert exact_s.columns == exact_b.columns
     assert rows(exact_s) == rows(exact_b)
 
-    fuzzy_b = compare_pairs_fuzzy(pairs, recs, CFG, n_records=5)
-    fuzzy_s = compare_pairs_fuzzy(pairs, recs, shuffled, n_records=5)
-    plan = fuzzy_s._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("ShuffledHashJoin") >= 5  # stems x2, jw table, attrs x2
+    fuzzy_b, fuzzy_s = both(lambda: compare_pairs_fuzzy(pairs, recs, CFG, n_records=5))
+    assert plan(fuzzy_s).count("ShuffledHashJoin") >= 5  # stems x2, jw table, attrs x2
     assert fuzzy_s.columns == fuzzy_b.columns
     assert rows(fuzzy_s) == rows(fuzzy_b)
     assert len(rows(fuzzy_b)) == 10
@@ -152,5 +178,5 @@ def test_shuffle_hash_regime_equals_broadcast_regime(spark):
     assert fuzzy_b.jw_stem_cache is None and fuzzy_s.jw_stem_cache is None
     # an unknown records size (None) takes the shuffle-hash regime, no count
     fuzzy_u = compare_pairs_fuzzy(pairs, recs, CFG)
-    assert "ShuffledHashJoin" in fuzzy_u._jdf.queryExecution().executedPlan().toString()
+    assert "ShuffledHashJoin" in plan(fuzzy_u)
     assert rows(fuzzy_u) == rows(fuzzy_b)
